@@ -13,7 +13,7 @@ arithmetic (multiply/add/modulo, integer-by-100.0 division, day-level
 timestamp adds, list indexing) — every operation is bit-exact and
 engine-independent, so the Spark plan and the DuckDB oracle see
 identical extended tables and the driver's value-hash gate applies to
-Tier B like any other query. Formulas match tools/gen_tier_b.py.
+Tier B like any other query.
 
 Scale note: the derivations are stateless narrow projections (no
 shuffle, no RNG state); partsupp is part ⨯ 4 with a broadcast 1-row
@@ -23,7 +23,7 @@ whatever join consumes it.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dask_distributed_vanilla_spark.catalog import load_table
@@ -36,13 +36,20 @@ CONTAINERS = (
 )
 
 
-def _pick(values: tuple[str, ...], index1: Column) -> Column:
+def _pick(values: tuple[str, ...], index1: str) -> str:
     """1-based list indexing, mirroring DuckDB's ``[list][expr]``."""
-    return F.element_at(F.array(*[F.lit(v) for v in values]), index1.cast("int"))
+    items = ", ".join(f"'{v}'" for v in values)
+    return f"element_at(array({items}), CAST({index1} AS INT))"
 
 
-def _day_add(ts_col: str, days_expr: str) -> Column:
-    return F.expr(f"timestampadd(DAY, CAST({days_expr} AS INT), {ts_col})")
+def _day_add(ts_col: str, days_expr: str) -> str:
+    return f"timestampadd(DAY, CAST({days_expr} AS INT), {ts_col})"
+
+
+# Each table below is ONE projection of SQL-string expressions: a single
+# py4j call and one analysis per table, where a chain of withColumn calls
+# over Column objects costs a round trip per function and literal and
+# re-analyzes the plan per column.
 
 
 def partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -51,98 +58,71 @@ def partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
     ps_suppkey lands in [0, |supplier|) — the fixture keys are 0-based —
     via a broadcast 1-row count (one plan, no driver action).
     ps_supplycost is integer/100.0: IEEE division of an exact integer is
-    bit-identical across engines, so no cross-engine rounding is needed.
+    bit-identical across engines, so no cross-engine rounding is needed
+    (the ``D`` suffix keeps the literals DOUBLE, not DECIMAL).
     """
     p = load_table(spark, sf_dir, "part").select("p_partkey")
-    s_cnt = load_table(spark, sf_dir, "supplier").agg(F.count(F.lit(1)).alias("s_cnt"))
-    i = spark.range(4).select(F.col("id").alias("i"))
-    pk, ii = F.col("p_partkey"), F.col("i")
+    s_cnt = load_table(spark, sf_dir, "supplier").selectExpr("count(1) AS s_cnt")
+    i = spark.range(4).selectExpr("id AS i")
     return (
         p.crossJoin(F.broadcast(i))
         .crossJoin(F.broadcast(s_cnt))
-        .select(
-            pk.alias("ps_partkey"),
-            ((pk * 7 + ii * 13) % F.col("s_cnt")).alias("ps_suppkey"),
-            ((pk * 37 + ii * 101) % 9999 + 1).cast("int").alias("ps_availqty"),
-            (((pk * 53 + ii * 211) % 99900) / F.lit(100.0) + 1.0).alias("ps_supplycost"),
-            F.concat(F.lit("ps comment "), ((pk + ii) % 7).cast("string")).alias("ps_comment"),
+        .selectExpr(
+            "p_partkey AS ps_partkey",
+            "(p_partkey * 7 + i * 13) % s_cnt AS ps_suppkey",
+            "CAST((p_partkey * 37 + i * 101) % 9999 + 1 AS INT) AS ps_availqty",
+            "((p_partkey * 53 + i * 211) % 99900) / 100.0D + 1.0D AS ps_supplycost",
+            "concat('ps comment ', CAST((p_partkey + i) % 7 AS STRING)) AS ps_comment",
         )
     )
 
 
 def ext_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = load_table(spark, sf_dir, "lineitem")
-    ok, ln = F.col("l_orderkey"), F.col("l_linenumber")
-    return (
-        l.withColumn("l_commitdate", _day_add("l_shipdate", "(l_orderkey*3 + l_linenumber*11) % 60 - 20"))
-        .withColumn("l_receiptdate", _day_add("l_shipdate", "(l_orderkey*5 + l_linenumber*7) % 30 + 1"))
-        .withColumn("l_shipinstruct", _pick(INSTRUCTS, (ok + ln) % 4 + 1))
-        .withColumn("l_shipmode", _pick(SHIPMODES, (ok * 3 + ln) % 7 + 1))
-        .withColumn("l_comment", F.concat(F.lit("li comment "), ln.cast("string")))
+    return load_table(spark, sf_dir, "lineitem").selectExpr(
+        "*",
+        _day_add("l_shipdate", "(l_orderkey*3 + l_linenumber*11) % 60 - 20") + " AS l_commitdate",
+        _day_add("l_shipdate", "(l_orderkey*5 + l_linenumber*7) % 30 + 1") + " AS l_receiptdate",
+        _pick(INSTRUCTS, "(l_orderkey + l_linenumber) % 4 + 1") + " AS l_shipinstruct",
+        _pick(SHIPMODES, "(l_orderkey * 3 + l_linenumber) % 7 + 1") + " AS l_shipmode",
+        "concat('li comment ', CAST(l_linenumber AS STRING)) AS l_comment",
     )
 
 
 def ext_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load_table(spark, sf_dir, "orders")
-    ok = F.col("o_orderkey")
-    return (
-        o.withColumn("o_clerk", F.concat(F.lit("Clerk#"), (ok % 1000).cast("string")))
-        .withColumn("o_shippriority", F.lit(0).cast("int"))
-        .withColumn(
-            "o_comment",
-            F.when(ok % 11 == 0, F.lit("blah special packages requests blah")).otherwise(
-                F.concat(F.lit("ordinary comment "), (ok % 5).cast("string"))
-            ),
-        )
+    return load_table(spark, sf_dir, "orders").selectExpr(
+        "*",
+        "concat('Clerk#', CAST(o_orderkey % 1000 AS STRING)) AS o_clerk",
+        "CAST(0 AS INT) AS o_shippriority",
+        "CASE WHEN o_orderkey % 11 = 0 THEN 'blah special packages requests blah'"
+        " ELSE concat('ordinary comment ', CAST(o_orderkey % 5 AS STRING)) END AS o_comment",
     )
 
 
 def ext_part(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = load_table(spark, sf_dir, "part")
-    pk = F.col("p_partkey")
-    return (
-        p.withColumn("p_mfgr", F.concat(F.lit("Manufacturer#"), (pk % 5 + 1).cast("string")))
-        .withColumn("p_container", _pick(CONTAINERS, pk % 8 + 1))
-        .withColumn("p_comment", F.concat(F.lit("part comment "), (pk % 3).cast("string")))
+    return load_table(spark, sf_dir, "part").selectExpr(
+        "*",
+        "concat('Manufacturer#', CAST(p_partkey % 5 + 1 AS STRING)) AS p_mfgr",
+        _pick(CONTAINERS, "p_partkey % 8 + 1") + " AS p_container",
+        "concat('part comment ', CAST(p_partkey % 3 AS STRING)) AS p_comment",
     )
 
 
 def ext_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = load_table(spark, sf_dir, "supplier")
-    sk = F.col("s_suppkey")
-    return (
-        s.withColumn("s_address", F.concat(F.lit("addr "), sk.cast("string")))
-        .withColumn(
-            "s_phone",
-            F.concat(
-                (F.col("s_nationkey") + 10).cast("string"),
-                F.lit("-555-"),
-                (1000 + sk % 9000).cast("string"),
-            ),
-        )
-        .withColumn(
-            "s_comment",
-            F.when(sk % 13 == 0, F.lit("blah Customer stuff Complaints blah")).otherwise(
-                F.concat(F.lit("supplier comment "), (sk % 4).cast("string"))
-            ),
-        )
+    return load_table(spark, sf_dir, "supplier").selectExpr(
+        "*",
+        "concat('addr ', CAST(s_suppkey AS STRING)) AS s_address",
+        "concat(CAST(s_nationkey + 10 AS STRING), '-555-', CAST(1000 + s_suppkey % 9000 AS STRING)) AS s_phone",
+        "CASE WHEN s_suppkey % 13 = 0 THEN 'blah Customer stuff Complaints blah'"
+        " ELSE concat('supplier comment ', CAST(s_suppkey % 4 AS STRING)) END AS s_comment",
     )
 
 
 def ext_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = load_table(spark, sf_dir, "customer")
-    ck = F.col("c_custkey")
-    return (
-        c.withColumn("c_address", F.concat(F.lit("caddr "), ck.cast("string")))
-        .withColumn(
-            "c_phone",
-            F.concat(
-                (F.col("c_nationkey") + 10).cast("string"),
-                F.lit("-555-"),
-                (1000 + ck % 9000).cast("string"),
-            ),
-        )
-        .withColumn("c_comment", F.concat(F.lit("customer comment "), (ck % 6).cast("string")))
+    return load_table(spark, sf_dir, "customer").selectExpr(
+        "*",
+        "concat('caddr ', CAST(c_custkey AS STRING)) AS c_address",
+        "concat(CAST(c_nationkey + 10 AS STRING), '-555-', CAST(1000 + c_custkey % 9000 AS STRING)) AS c_phone",
+        "concat('customer comment ', CAST(c_custkey % 6 AS STRING)) AS c_comment",
     )
 
 

@@ -23,6 +23,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dask_distributed_vanilla_spark.catalog import load_table, normalize_events_ts, parquet_schema
+
 
 def _as_stream_dir(sf_dir: str) -> str:
     """File stream sources watch a directory; expose the single events
@@ -35,14 +37,9 @@ def _as_stream_dir(sf_dir: str) -> str:
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The events fixture as a file-replay stream with event-time ts."""
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     stream = spark.readStream.schema(raw_schema).parquet(_as_stream_dir(sf_dir))
-    ts_type = dict(stream.dtypes).get("ts")
-    if ts_type == "bigint":  # TIMESTAMP(NANOS) fixture under nanosAsLong
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type == "timestamp_ntz":  # same fixture on builds that scan NTZ
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+    return normalize_events_ts(stream)
 
 
 def windowed_counts(stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
@@ -404,8 +401,6 @@ def stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     slowly-changing dim table; Spark re-plans it each micro-batch so
     dim updates are picked up without restarting the query.
     """
-    from dask_distributed_vanilla_spark.catalog import load_table
-
     sink = f"stream_enrich_{uuid.uuid4().hex[:8]}"
     dim = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
@@ -453,12 +448,7 @@ def stream_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = tempfile.mkdtemp(prefix="stream_mv_")
     src = f"{base}/src"
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-    ts_type = dict(batch.dtypes).get("ts")
-    if ts_type == "bigint":
-        batch = batch.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type == "timestamp_ntz":
-        batch = batch.withColumn("ts", F.col("ts").cast("timestamp"))
+    batch = load_table(spark, sf_dir, "events")
     # Source prep in ONE corpus pass (r14, guide §1.2): the former
     # four where(%4)+write jobs each re-scanned the events table; the
     # same deterministic event_id%4 shards now come off a single
