@@ -452,16 +452,19 @@ def stream_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Source prep in ONE corpus pass (r14, guide §1.2): the former
     # four where(%4)+write jobs each re-scanned the events table; the
     # same deterministic event_id%4 shards now come off a single
-    # materialized scan, and the four per-shard writes read cached
-    # blocks. (The unused events_stream() temp-dir setup that preceded
-    # this was dead work and is gone.)
-    sharded = batch.withColumn(
-        "shard", (F.col("event_id") % 4).cast("int")
-    ).localCheckpoint()
-    for i in range(4):  # deterministic 4-way split, one file per shard
-        sharded.where(F.col("shard") == i).drop("shard").coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
+    # cached scan, and the four per-shard writes read cached blocks.
+    # count() fills the cache with full parallelism (each coalesce(1)
+    # write below is one task). The blocks are released once the shards
+    # are written: the stream reads the files, never the cache.
+    sharded = batch.withColumn("shard", (F.col("event_id") % 4).cast("int")).cache()
+    try:
+        sharded.count()
+        for i in range(4):  # deterministic 4-way split, one file per shard
+            sharded.where(F.col("shard") == i).drop("shard").coalesce(1).write.mode(
+                "append"
+            ).parquet(src)
+    finally:
+        sharded.unpersist(blocking=True)
     stream = spark.readStream.schema(batch.schema).option(
         "maxFilesPerTrigger", 1
     ).parquet(src)

@@ -66,10 +66,11 @@ def merge_epoch_into_view(
     Exactly-once across retries WITHOUT epoch-partitioned storage: the
     view records the highest applied epoch, and a re-delivered epoch
     (<= that watermark) is a no-op — the transactional version-check
-    every lakehouse MERGE does. The merged view is localCheckpointed
+    every lakehouse MERGE does. The merged view is cached and filled
     before the overwrite so the write never re-reads the files it is
-    replacing, and the view stays aggregate-sized (|keys| rows), so
-    maintenance cost is O(delta + view), never O(history).
+    replacing, and released after it; the view stays aggregate-sized
+    (|keys| rows), so maintenance cost is O(delta + view), never
+    O(history).
     """
     from dask_distributed_vanilla_spark.session import ITER_LOOP_AQE, scoped_conf
 
@@ -101,8 +102,12 @@ def merge_epoch_into_view(
             merged = batch_df.groupBy(*keys).agg(
                 F.sum("n").alias("n"), F.sum("sv").alias("sv")
             )
-        out = merged.withColumn(MV_EPOCH_COL, F.lit(int(batch_id))).localCheckpoint()
-        out.write.mode("overwrite").parquet(view_path)
+        out = merged.withColumn(MV_EPOCH_COL, F.lit(int(batch_id))).cache()
+        try:
+            out.count()
+            out.write.mode("overwrite").parquet(view_path)
+        finally:
+            out.unpersist(blocking=True)
 
 
 def start_incremental_view(

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import zipfile
+
 import pytest
 
 from dask_distributed_vanilla_spark.client import Client
@@ -55,6 +57,17 @@ def test_upload_file(client, tmp_path):
         lambda: __import__("uploaded_helper").VALUE + 1, on_executors=True
     )
     assert set(got) == {42}
+
+    # a zip shipped after the workers have run tasks: its importer is new
+    # to every worker and reads the archive on first use
+    archive = tmp_path / "uploaded_zip_helper.zip"
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr("uploaded_zip_helper.py", "VALUE = 6\n")
+    client.upload_file(str(archive))
+    got = client.run(
+        lambda: __import__("uploaded_zip_helper").VALUE + 1, on_executors=True
+    )
+    assert set(got) == {7}
 
 
 class _CounterPlugin:

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from dask_distributed_vanilla_spark.operators.events import e5
 from dask_distributed_vanilla_spark.streaming.events_stream import events_stream, stream_e1
 from dask_distributed_vanilla_spark.streaming.stateful import sessionize_stream
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, assert_matches_oracle
 
 
 def test_stream_e1_equals_batch(spark):
@@ -153,6 +153,24 @@ def test_incremental_view_epoch_replay_is_noop(spark, tmp_path):
     merge_epoch_into_view(b1, 0, view, ["k"])  # stale epoch: also a no-op
     got = {r.k: (r.n, r.sv) for r in spark.read.parquet(view).collect()}
     assert got == {"a": (3, 11.0), "b": (1, 5.0)}
+
+
+def test_incremental_mv_releases_its_cached_blocks(spark, oracle):
+    """stream_incremental_mv caches the sharded events table only while
+    it writes the shards: no cached RDD outlives the query, and the view
+    still matches its oracle."""
+    from dask_distributed_vanilla_spark.streaming.events_stream import (
+        STREAM_INCREMENTAL_MV_SQL,
+        stream_incremental_mv,
+    )
+
+    jsc = spark.sparkContext._jsc.sc()
+    before = {i.id() for i in jsc.getRDDStorageInfo()}
+    got = stream_incremental_mv(spark, SF_SMOKE).toPandas()
+    after = {i.id() for i in jsc.getRDDStorageInfo()}
+    assert after - before == set()
+    want = oracle.execute(STREAM_INCREMENTAL_MV_SQL).fetchdf()
+    assert_matches_oracle(got, want, "stream_incremental_mv")
 
 
 def test_checkpoint_restart_processes_only_new_files(spark, tmp_path):

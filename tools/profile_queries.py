@@ -1,9 +1,9 @@
-"""Round-13 optimization profiler: time named queries and dump plans.
+"""Query profiler: time named queries and dump plans.
 
 Usage:
-  python tools/profile_r13.py q1 q2 ...        # time only (3 reps)
-  python tools/profile_r13.py --plans-to plans/r13 --suffix before q1 ...
-  python tools/profile_r13.py --all            # whole suite, 1 rep
+  python tools/profile_queries.py q1 q2 ...        # time only (3 reps)
+  python tools/profile_queries.py --plans-to plans/rNN --suffix before q1 ...
+  python tools/profile_queries.py --all            # whole suite, 1 rep
 
 Times the same action as bench.py (plan build -> collect) at
 $SPARK_GRAFT_SF_DIR (default sf0.1), after the same whole-suite input
@@ -38,7 +38,7 @@ def main() -> None:
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("profile_r13")
+    spark = get_spark("profile")
     spark.sparkContext.setLogLevel("ERROR")
     for t in TABLES:
         load_table(spark, sf_dir, t).count()
@@ -48,7 +48,7 @@ def main() -> None:
     reps = 1 if args.all else args.reps
     out: dict[str, list[float]] = {}
     for name in names:
-        spark.sparkContext.setJobDescription(f"r13:{name}")
+        spark.sparkContext.setJobDescription(name)
         runs = []
         for _ in range(reps):
             t0 = time.perf_counter()
