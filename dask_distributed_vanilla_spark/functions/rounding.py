@@ -26,7 +26,7 @@ cells / integer cents, never .xx5 doubles):
     (operators/similarity.py:554, oracle twin :603) — the round IS the
     quantizer; both sides round the same expression so MAE matches.
   - stream_update_totals integer-cents normalization
-    (streaming/events_stream.py:656) — cents are exact integers; the
+    (streaming/events_stream.py) — cents are exact integers; the
     round removes double noise BEFORE the sum, not after it.
 
 A future rounding sweep must leave these two as-is: "fixing" them to

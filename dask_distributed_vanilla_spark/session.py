@@ -88,7 +88,7 @@ ITER_LOOP_AQE = os.environ.get("SPARK_GRAFT_ITER_AQE", "false")
 def scoped_conf(spark: SparkSession, confs: dict[str, str]):
     """Set session confs for the duration of a block, restoring the
     previous values on exit — the engine's pattern for loop-scoped
-    sizing (streaming's _stream_shuffle generalized)."""
+    sizing."""
     old = {k: spark.conf.get(k) for k in confs}
     for k, v in confs.items():
         spark.conf.set(k, v)

@@ -16,7 +16,7 @@ sink instead of `complete` to memory, watermark bounding state size.
 
 from __future__ import annotations
 
-import os
+import shutil
 import tempfile
 import uuid
 
@@ -24,22 +24,79 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dask_distributed_vanilla_spark.catalog import load_table, normalize_events_ts, parquet_schema
+from dask_distributed_vanilla_spark.session import scoped_conf
 
+# Scope off the trailing no-data micro-batch for streams whose
+# RESULTS don't depend on it (r14, guide §1.2: don't compute things
+# you throw away).
+#
+# availableNow appends one extra data-free micro-batch after the last
+# file batch so the advanced watermark can evict state and flush
+# watermark-gated output. That flush is semantics for append-mode
+# queries that hold rows back (stream_outer_join's null-matches,
+# stream_two_level's closed days, stream_stateful's EventTimeTimeout
+# sessions — all deliberately NOT given this conf). It is pure overhead for:
+#
+# - complete-mode aggregates (stream_e1/sliding/session/enrich/
+#   approx_distinct): every batch re-emits the FULL result table and
+#   complete mode never evicts aggregation state, so the extra batch
+#   rewrites an identical table into the sink;
+# - append-mode operators that emit on arrival (stream_dedup's
+#   dropDuplicates, stream_join's stream-stream INNER join): with the
+#   replayed corpus in the data batches, every output row has already
+#   been emitted — the final batch exists only to expire state that
+#   is about to be dropped with the query.
+#
+# Each skipped batch saves a full micro-batch cycle (offset/commit
+# log writes + one state-store commit per partition + sink rewrite).
+# A live deployment keeps the default (state eviction is the point
+# there); the conf is scoped to the query's run.
+_NO_DATA_BATCH_OFF = {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
 
-def _as_stream_dir(sf_dir: str) -> str:
-    """File stream sources watch a directory; expose the single events
-    parquet through a temp dir symlink (a real deployment points at the
-    landing directory or a Kafka topic instead)."""
-    d = tempfile.mkdtemp(prefix="events_stream_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{d}/events.parquet")
-    return d
+# A stateful stream pays fixed per-micro-batch cost for EVERY state
+# store instance (a stream-stream join keeps 4 per partition), and the
+# count is pinned by the first checkpoint — so it must be sized to the
+# stream's volume up front, not inherited from the batch default. The
+# fixture replay is small → 4; a production Kafka topic would size
+# this to sustained rows/sec per core exactly the same way (5× here:
+# 15.5s → 3s at sf0.1 with 32 → 4).
+_STATE_SHUFFLE = {"spark.sql.shuffle.partitions": "4"}
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The events fixture as a file-replay stream with event-time ts."""
+    """The events fixture as a file-replay stream with event-time ts.
+
+    A file stream source rejects a plain file path, so the source names
+    the fixture file through a one-entry glob (a real deployment points
+    at the landing directory or a Kafka topic instead)."""
     raw_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
-    stream = spark.readStream.schema(raw_schema).parquet(_as_stream_dir(sf_dir))
+    stream = spark.readStream.schema(raw_schema).parquet(f"{sf_dir}/events.parq[u]et")
     return normalize_events_ts(stream)
+
+
+def run_to_memory(df: DataFrame, mode: str, confs: dict[str, str]) -> DataFrame:
+    """Run the streaming frame `df` to completion into a memory sink
+    (availableNow trigger, output `mode`) with the session `confs` set
+    for the run, and return the sink's rows.
+
+    The sink's temp view is dropped before returning: the returned
+    frame holds the resolved plan of the sink, not the view name, so it
+    stays readable while the session keeps no per-run table."""
+    spark = df.sparkSession
+    sink = f"stream_{uuid.uuid4().hex[:8]}"
+    try:
+        with scoped_conf(spark, confs):
+            q = (
+                df.writeStream.format("memory")
+                .queryName(sink)
+                .outputMode(mode)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+        return spark.table(sink)
+    finally:
+        spark.catalog.dropTempView(sink)
 
 
 def windowed_counts(stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
@@ -55,18 +112,8 @@ def windowed_counts(stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
 def stream_e1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Judged query: run the stream to completion (availableNow trigger,
     complete mode → memory sink) and return the final window table."""
-    sink = f"stream_e1_{uuid.uuid4().hex[:8]}"
-    with _skip_no_data_batch(spark):
-        q = (
-            windowed_counts(events_stream(spark, sf_dir))
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink).orderBy("event_type", "w")
+    out = run_to_memory(windowed_counts(events_stream(spark, sf_dir)), "complete", _NO_DATA_BATCH_OFF)
+    return out.orderBy("event_type", "w")
 
 
 # Epoch-aligned 1-hour tumbling windows == date_trunc('hour', ts).
@@ -82,22 +129,14 @@ def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     each event lands in exactly two windows; watermark bounds state. The
     oracle replicates the hop by exploding each event into its two
     covering window starts (date_trunc and date_trunc − 1h)."""
-    sink = f"stream_sliding_{uuid.uuid4().hex[:8]}"
-    with _skip_no_data_batch(spark):
-        q = (
-            events_stream(spark, sf_dir)
-            .withWatermark("ts", "2 hours")
-            .groupBy("event_type", F.window("ts", "2 hours", "1 hour").alias("win"))
-            .agg(F.count(F.lit(1)).alias("n"), (F.floor((F.sum("value")) * 100 + F.lit(0.5)) / 100).alias("sv"))
-            .select("event_type", F.col("win.start").alias("w"), "n", "sv")
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink).orderBy("event_type", "w")
+    windows = (
+        events_stream(spark, sf_dir)
+        .withWatermark("ts", "2 hours")
+        .groupBy("event_type", F.window("ts", "2 hours", "1 hour").alias("win"))
+        .agg(F.count(F.lit(1)).alias("n"), (F.floor((F.sum("value")) * 100 + F.lit(0.5)) / 100).alias("sv"))
+        .select("event_type", F.col("win.start").alias("w"), "n", "sv")
+    )
+    return run_to_memory(windows, "complete", _NO_DATA_BATCH_OFF).orderBy("event_type", "w")
 
 
 STREAM_SLIDING_SQL = """
@@ -115,22 +154,14 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     within the watermark (the at-least-once-source dedup every ingest
     pipeline needs), then per-type counts of the deduped stream read back
     from the sink. State holds only ids inside the watermark horizon."""
-    sink = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    with _skip_no_data_batch(spark):
-        q = (
-            events_stream(spark, sf_dir)
-            .withWatermark("ts", "2 hours")
-            .dropDuplicates(["event_id"])
-            .select("event_id", "event_type", "value")
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    deduped = (
+        events_stream(spark, sf_dir)
+        .withWatermark("ts", "2 hours")
+        .dropDuplicates(["event_id"])
+        .select("event_id", "event_type", "value")
+    )
     return (
-        spark.table(sink)
+        run_to_memory(deduped, "append", _NO_DATA_BATCH_OFF)
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_unique"),
@@ -150,74 +181,9 @@ FROM (SELECT DISTINCT ON (event_id) event_id, event_type, value FROM events
 GROUP BY 1 ORDER BY 1
 """
 
-from contextlib import contextmanager
-
-
-@contextmanager
-def _skip_no_data_batch(spark: SparkSession):
-    """Scope off the trailing no-data micro-batch for streams whose
-    RESULTS don't depend on it (r14, guide §1.2: don't compute things
-    you throw away).
-
-    availableNow appends one extra data-free micro-batch after the last
-    file batch so the advanced watermark can evict state and flush
-    watermark-gated output. That flush is semantics for append-mode
-    queries that hold rows back (stream_outer_join's null-matches,
-    stream_two_level's closed days, stream_stateful's EventTimeTimeout
-    sessions — all deliberately NOT wrapped). It is pure overhead for:
-
-    - complete-mode aggregates (stream_e1/sliding/session/enrich/
-      approx_distinct): every batch re-emits the FULL result table and
-      complete mode never evicts aggregation state, so the extra batch
-      rewrites an identical table into the sink;
-    - append-mode operators that emit on arrival (stream_dedup's
-      dropDuplicates, stream_join's stream-stream INNER join): with the
-      replayed corpus in the data batches, every output row has already
-      been emitted — the final batch exists only to expire state that
-      is about to be dropped with the query.
-
-    Each skipped batch saves a full micro-batch cycle (offset/commit
-    log writes + one state-store commit per partition + sink rewrite).
-    A live deployment keeps the default (state eviction is the point
-    there); this scope is per-query and resets on exit."""
-    old = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", old)
-
-
-@contextmanager
-def _stream_shuffle(spark: SparkSession, n: int):
-    """Scope the shuffle-partition count for a streaming query.
-
-    A stateful stream pays fixed per-micro-batch cost for EVERY state
-    store instance (a stream-stream join keeps 4 per partition), and the
-    count is pinned by the first checkpoint — so it must be sized to the
-    stream's volume up front, not inherited from the batch default. The
-    fixture replay is small → 4; a production Kafka topic would size
-    this to sustained rows/sec per core exactly the same way (5× here:
-    15.5s → 3s at sf0.1 with 32 → 4)."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-
-
-def stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Judged query: watermarked stream-stream interval join — the
-    click→purchase attribution shape (purchase within 1 hour of a click
-    by the same user). Both sides carry watermarks and the join condition
-    bounds event time, so Spark can expire join state: a click older than
-    the watermark minus the interval can never match a future purchase
-    and is dropped. Without the time bound the join state grows without
-    limit — the condition is the scale contract, not a filter. The joined
-    pairs land in an append-mode sink; the per-day rollup is a batch agg
-    over the sink table."""
-    sink = f"stream_join_{uuid.uuid4().hex[:8]}"
+def _clicks_and_purchases(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The two legs of the click→purchase attribution joins, each its
+    own read of the events stream with a 2-hour watermark."""
     clicks = (
         events_stream(spark, sf_dir)
         .where(F.col("event_type") == "click")
@@ -238,24 +204,28 @@ def stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withWatermark("purch_ts", "2 hours")
     )
-    with _stream_shuffle(spark, 4), _skip_no_data_batch(spark):
-        q = (
-            clicks.join(
-                purchases,
-                (F.col("user_id") == F.col("p_user_id"))
-                & (F.col("purch_ts") >= F.col("click_ts"))
-                & (F.col("purch_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
-            )
-            .select("user_id", "click_id", "purch_id", "click_ts")
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    return clicks, purchases
+
+
+def stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Judged query: watermarked stream-stream interval join — the
+    click→purchase attribution shape (purchase within 1 hour of a click
+    by the same user). Both sides carry watermarks and the join condition
+    bounds event time, so Spark can expire join state: a click older than
+    the watermark minus the interval can never match a future purchase
+    and is dropped. Without the time bound the join state grows without
+    limit — the condition is the scale contract, not a filter. The joined
+    pairs land in an append-mode sink; the per-day rollup is a batch agg
+    over the sink table."""
+    clicks, purchases = _clicks_and_purchases(spark, sf_dir)
+    pairs = clicks.join(
+        purchases,
+        (F.col("user_id") == F.col("p_user_id"))
+        & (F.col("purch_ts") >= F.col("click_ts"))
+        & (F.col("purch_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
+    ).select("user_id", "click_id", "purch_id", "click_ts")
     return (
-        spark.table(sink)
+        run_to_memory(pairs, "append", {**_STATE_SHUFFLE, **_NO_DATA_BATCH_OFF})
         .groupBy(F.date_trunc("day", F.col("click_ts")).alias("day"))
         .agg(
             F.count(F.lit(1)).alias("n_pairs"),
@@ -286,31 +256,24 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     by *open* sessions, not history. Session end is last event + gap by
     definition; the oracle reproduces exactly that with a lag-based gap
     split."""
-    sink = f"stream_session_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle(spark, 4), _skip_no_data_batch(spark):
-        q = (
-            events_stream(spark, sf_dir)
-            .withWatermark("ts", "2 hours")
-            .groupBy("user_id", F.session_window("ts", "30 minutes").alias("win"))
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                (F.floor((F.sum("value")) * 100 + F.lit(0.5)) / 100).alias("sv"),
-            )
-            .select(
-                "user_id",
-                F.col("win.start").alias("s_start"),
-                F.col("win.end").alias("s_end"),
-                "n_events",
-                "sv",
-            )
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
+    sessions = (
+        events_stream(spark, sf_dir)
+        .withWatermark("ts", "2 hours")
+        .groupBy("user_id", F.session_window("ts", "30 minutes").alias("win"))
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            (F.floor((F.sum("value")) * 100 + F.lit(0.5)) / 100).alias("sv"),
         )
-        q.awaitTermination()
-    return spark.table(sink).orderBy("user_id", "s_start")
+        .select(
+            "user_id",
+            F.col("win.start").alias("s_start"),
+            F.col("win.end").alias("s_end"),
+            "n_events",
+            "sv",
+        )
+    )
+    out = run_to_memory(sessions, "complete", {**_STATE_SHUFFLE, **_NO_DATA_BATCH_OFF})
+    return out.orderBy("user_id", "s_start")
 
 
 # Gap-split sessions: start = first ts, end = last ts + gap (the
@@ -349,22 +312,16 @@ def stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule on both engines."""
     from dask_distributed_vanilla_spark.streaming.stateful import sessionize_stream
 
-    sink = f"stream_stateful_{uuid.uuid4().hex[:8]}"
     # Unlike the JVM-stateful streams (4 partitions best: state-store
     # overhead dominates), the Python fold is CPU-bound per partition —
     # measured at sf0.1: 1→18.1s, 4→6.2s, 16→5.0s, 32→5.2s. Size to
     # the Arrow-fold parallelism, not the state-store minimum.
-    with _stream_shuffle(spark, 16):
-        q = (
-            sessionize_stream(events_stream(spark, sf_dir))
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink).orderBy("user_id", "session_start")
+    out = run_to_memory(
+        sessionize_stream(events_stream(spark, sf_dir)),
+        "append",
+        {"spark.sql.shuffle.partitions": "16"},
+    )
+    return out.orderBy("user_id", "session_start")
 
 
 STREAM_STATEFUL_SQL = """
@@ -401,26 +358,18 @@ def stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     slowly-changing dim table; Spark re-plans it each micro-batch so
     dim updates are picked up without restarting the query.
     """
-    sink = f"stream_enrich_{uuid.uuid4().hex[:8]}"
     dim = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
-    with _skip_no_data_batch(spark):
-        q = (
-            events_stream(spark, sf_dir)
-            .withWatermark("ts", "1 hour")
-            .join(F.broadcast(dim), "user_id")
-            .groupBy("c_mktsegment", F.window("ts", "1 day").alias("win"))
-            .agg(F.count(F.lit(1)).alias("n"), (F.floor((F.sum("value")) * 100 + F.lit(0.5)) / 100).alias("sv"))
-            .select("c_mktsegment", F.col("win.start").alias("w"), "n", "sv")
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink).orderBy("c_mktsegment", "w")
+    revenue = (
+        events_stream(spark, sf_dir)
+        .withWatermark("ts", "1 hour")
+        .join(F.broadcast(dim), "user_id")
+        .groupBy("c_mktsegment", F.window("ts", "1 day").alias("win"))
+        .agg(F.count(F.lit(1)).alias("n"), (F.floor((F.sum("value")) * 100 + F.lit(0.5)) / 100).alias("sv"))
+        .select("c_mktsegment", F.col("win.start").alias("w"), "n", "sv")
+    )
+    return run_to_memory(revenue, "complete", _NO_DATA_BATCH_OFF).orderBy("c_mktsegment", "w")
 
 
 STREAM_ENRICH_SQL = """
@@ -442,8 +391,6 @@ def stream_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost is O(delta + view) per epoch, and an epoch replayed after a
     failure is a no-op, never a double-count.
     """
-    import tempfile
-
     from dask_distributed_vanilla_spark.streaming.sinks import start_incremental_view
 
     base = tempfile.mkdtemp(prefix="stream_mv_")
@@ -472,6 +419,10 @@ def stream_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream, ["event_type"], f"{base}/view", f"{base}/ckpt"
     )
     q.awaitTermination()
+    # The returned frame reads only the view; the shard copy of events
+    # and the checkpoint are spent once the drain has ended.
+    shutil.rmtree(src)
+    shutil.rmtree(f"{base}/ckpt")
     return (
         spark.read.parquet(f"{base}/view")
         .select(
@@ -502,22 +453,15 @@ def stream_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract, not the estimate itself, is what this operator pins;
     the estimate-vs-exact bound is pytest-checked like e18's.
     """
-    sink = f"stream_hll_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle(spark, 4), _skip_no_data_batch(spark):
-        q = (
-            events_stream(spark, sf_dir)
-            .withWatermark("ts", "1 hour")
-            .groupBy("event_type", F.window("ts", "1 day").alias("win"))
-            .agg(F.approx_count_distinct("user_id").alias("approx_users"))
-            .select("event_type", F.col("win.start").alias("w"), "approx_users")
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink).orderBy("event_type", "w")
+    sketches = (
+        events_stream(spark, sf_dir)
+        .withWatermark("ts", "1 hour")
+        .groupBy("event_type", F.window("ts", "1 day").alias("win"))
+        .agg(F.approx_count_distinct("user_id").alias("approx_users"))
+        .select("event_type", F.col("win.start").alias("w"), "approx_users")
+    )
+    out = run_to_memory(sketches, "complete", {**_STATE_SHUFFLE, **_NO_DATA_BATCH_OFF})
+    return out.orderBy("event_type", "w")
 
 
 # Rollup cutoff for the outer join: far enough before the stream's end
@@ -543,46 +487,16 @@ def stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     state when the replay ends — excluded identically on both engines
     rather than hand-waved.
     """
-    sink = f"stream_oj_{uuid.uuid4().hex[:8]}"
-    clicks = (
-        events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "click")
-        .select(
-            F.col("user_id"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "2 hours")
-    )
-    purchases = (
-        events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user_id"),
-            F.col("event_id").alias("purch_id"),
-            F.col("ts").alias("purch_ts"),
-        )
-        .withWatermark("purch_ts", "2 hours")
-    )
-    with _stream_shuffle(spark, 4):
-        q = (
-            clicks.join(
-                purchases,
-                (F.col("user_id") == F.col("p_user_id"))
-                & (F.col("purch_ts") >= F.col("click_ts"))
-                & (F.col("purch_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
-                "left_outer",
-            )
-            .select("user_id", "click_id", "purch_id", "click_ts")
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    clicks, purchases = _clicks_and_purchases(spark, sf_dir)
+    rows = clicks.join(
+        purchases,
+        (F.col("user_id") == F.col("p_user_id"))
+        & (F.col("purch_ts") >= F.col("click_ts"))
+        & (F.col("purch_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
+        "left_outer",
+    ).select("user_id", "click_id", "purch_id", "click_ts")
     return (
-        spark.table(sink)
+        run_to_memory(rows, "append", _STATE_SHUFFLE)
         .where(F.col("click_ts") < F.lit(OUTER_JOIN_CUTOFF).cast("timestamp"))
         .groupBy(F.date_trunc("day", F.col("click_ts")).alias("day"))
         .agg(
@@ -623,39 +537,29 @@ def stream_two_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     granularity instead of buffering raw events all day. Append mode —
     a daily row emits only when the watermark proves its hours final.
     """
-    sink = f"stream_2l_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle(spark, 4):
-        hourly = (
-            events_stream(spark, sf_dir)
-            .withWatermark("ts", "2 hours")
-            .groupBy(F.window("ts", "1 hour").alias("hw"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sv"))
+    hourly = (
+        events_stream(spark, sf_dir)
+        .withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour").alias("hw"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sv"))
+    )
+    daily = (
+        hourly.groupBy(
+            F.window(F.window_time("hw"), "1 day").alias("dw"), "event_type"
         )
-        daily = (
-            hourly.groupBy(
-                F.window(F.window_time("hw"), "1 day").alias("dw"), "event_type"
-            )
-            .agg(
-                F.sum("n").alias("n"),
-                (F.floor((F.sum("sv")) * 100 + F.lit(0.5)) / 100).alias("sv"),
-                F.count(F.lit(1)).alias("n_hours"),
-            )
-            .select(
-                "event_type", F.col("dw.start").alias("day"), "n", "sv", "n_hours"
-            )
+        .agg(
+            F.sum("n").alias("n"),
+            (F.floor((F.sum("sv")) * 100 + F.lit(0.5)) / 100).alias("sv"),
+            F.count(F.lit(1)).alias("n_hours"),
         )
-        q = (
-            daily.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+        .select(
+            "event_type", F.col("dw.start").alias("day"), "n", "sv", "n_hours"
         )
-        q.awaitTermination()
+    )
     # append mode withholds the final (unclosed) day per type; compare
     # the closed-day region — identical cutoff logic on both engines
     return (
-        spark.table(sink)
+        run_to_memory(daily, "append", _STATE_SHUFFLE)
         .where(F.col("day") < F.lit(OUTER_JOIN_CUTOFF).cast("timestamp"))
         .orderBy("event_type", "day")
     )
@@ -685,32 +589,20 @@ def stream_update_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps the latest row per key. Money rides integer cents inside the
     aggregate so the totals are exact on any engine.
     """
-    sink = f"stream_upd_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle(spark, 4):
-        q = (
-            events_stream(spark, sf_dir)
-            .groupBy("user_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                (
-                    F.sum(F.round(F.col("value") * 100).cast("long")).cast("double")
-                    / 100
-                ).alias("sv"),
-            )
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    totals = events_stream(spark, sf_dir).groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        (
+            F.sum(F.round(F.col("value") * 100).cast("long")).cast("double")
+            / 100
+        ).alias("sv"),
+    )
     # The memory sink appends each update. Only the event COUNT is
     # guaranteed monotone across updates; the money sum is not (a refund
     # / negative value would make max(sv) pick an intermediate total),
     # so recover the sv that belongs to the LATEST update via max_by on
     # the count rather than max of the value.
     return (
-        spark.table(sink)
+        run_to_memory(totals, "update", _STATE_SHUFFLE)
         .groupBy("user_id")
         .agg(
             F.max("n_events").alias("n_events"),

@@ -3,12 +3,22 @@ custom stateful sessionization operator."""
 
 from __future__ import annotations
 
-import uuid
+import os
+import shutil
+import tempfile
 
 from pyspark.sql import functions as F
 
 from dask_distributed_vanilla_spark.operators.events import e5
-from dask_distributed_vanilla_spark.streaming.events_stream import events_stream, stream_e1
+from dask_distributed_vanilla_spark.session import scoped_conf
+from dask_distributed_vanilla_spark.streaming.events_stream import (
+    STREAM_E1_SQL,
+    STREAM_JOIN_SQL,
+    events_stream,
+    run_to_memory,
+    stream_e1,
+    stream_join,
+)
 from dask_distributed_vanilla_spark.streaming.stateful import sessionize_stream
 from tests.conftest import SF_SMOKE, assert_matches_oracle
 
@@ -32,17 +42,7 @@ def test_stream_e1_equals_batch(spark):
 def test_stateful_sessionization(spark):
     """Replay the fixture through applyInPandasWithState; closed sessions
     must agree with the batch E5 sessionization on (count, sum)."""
-    sink = f"sess_{uuid.uuid4().hex[:8]}"
-    q = (
-        sessionize_stream(events_stream(spark, SF_SMOKE))
-        .writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.table(sink)
+    got = run_to_memory(sessionize_stream(events_stream(spark, SF_SMOKE)), "append", {})
     batch = e5(spark, SF_SMOKE)
 
     # single availableNow replay closes only sessions followed by a >gap
@@ -65,17 +65,8 @@ def test_windowed_counts_watermark_drops_late(spark):
     still processes (smoke for the watermark plumbing)."""
     from dask_distributed_vanilla_spark.streaming.events_stream import windowed_counts
 
-    sink = f"wm_{uuid.uuid4().hex[:8]}"
-    q = (
-        windowed_counts(events_stream(spark, SF_SMOKE), watermark="10 minutes")
-        .writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    assert spark.table(sink).count() > 0
+    windows = windowed_counts(events_stream(spark, SF_SMOKE), watermark="10 minutes")
+    assert run_to_memory(windows, "update", {}).count() > 0
 
 
 def test_foreach_batch_exactly_once_parquet(spark, tmp_path):
@@ -166,11 +157,18 @@ def test_incremental_mv_releases_its_cached_blocks(spark, oracle):
 
     jsc = spark.sparkContext._jsc.sc()
     before = {i.id() for i in jsc.getRDDStorageInfo()}
+    dirs_before = set(_tmp_entries("stream_mv_"))
     got = stream_incremental_mv(spark, SF_SMOKE).toPandas()
     after = {i.id() for i in jsc.getRDDStorageInfo()}
     assert after - before == set()
     want = oracle.execute(STREAM_INCREMENTAL_MV_SQL).fetchdf()
     assert_matches_oracle(got, want, "stream_incremental_mv")
+    # the shard copy of events and the checkpoint are gone; only the
+    # view the returned frame reads is left
+    (new,) = set(_tmp_entries("stream_mv_")) - dirs_before
+    base = os.path.join(tempfile.gettempdir(), new)
+    assert os.listdir(base) == ["view"]
+    shutil.rmtree(base)
 
 
 def test_checkpoint_restart_processes_only_new_files(spark, tmp_path):
@@ -254,8 +252,6 @@ def test_watermark_bounds_join_state(spark, tmp_path):
     import time
     import uuid
 
-    from dask_distributed_vanilla_spark.streaming.events_stream import _stream_shuffle
-
     # ten chronological chunks -> ten micro-batches, watermark advancing
     src = str(tmp_path / "chunks")
     ev = spark.read.parquet(f"{SF_SMOKE}/events.parquet")
@@ -292,7 +288,7 @@ def test_watermark_bounds_join_state(spark, tmp_path):
         .withWatermark("purch_ts", "2 hours")
     )
     sink = f"state_bound_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle(spark, 4):
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "4"}):
         q = (
             clicks.join(
                 purchases,
@@ -345,14 +341,7 @@ def test_transform_with_state_totals(spark):
     if not HAVE_TWS_RUNTIME:
         pytest.skip("transformWithState worker needs google.protobuf (absent here)")
 
-    import uuid
-
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    from dask_distributed_vanilla_spark.streaming.events_stream import (
-        _stream_shuffle,
-        events_stream,
-    )
 
     out_schema = StructType(
         [
@@ -361,28 +350,20 @@ def test_transform_with_state_totals(spark):
             StructField("sv", DoubleType()),
         ]
     )
-    sink = f"tws_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle(spark, 4):
-        q = (
-            events_stream(spark, SF_SMOKE)
-            .select("user_id", "value")
-            .groupBy("user_id")
-            .transformWithStateInPandas(
-                RunningTotalsProcessor(),
-                outputStructType=out_schema,
-                outputMode="Update",
-                timeMode="None",
-            )
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
+    totals = (
+        events_stream(spark, SF_SMOKE)
+        .select("user_id", "value")
+        .groupBy("user_id")
+        .transformWithStateInPandas(
+            RunningTotalsProcessor(),
+            outputStructType=out_schema,
+            outputMode="Update",
+            timeMode="None",
         )
-        q.awaitTermination()
+    )
     got = {
         r["user_id"]: (r["n_events"], r["sv"])
-        for r in spark.table(sink)
+        for r in run_to_memory(totals, "update", {"spark.sql.shuffle.partitions": "4"})
         .groupBy("user_id")
         .agg(F.max("n_events").alias("n_events"), F.max("sv").alias("sv"))
         .collect()
@@ -400,3 +381,37 @@ def test_transform_with_state_totals(spark):
         .collect()
     }
     assert got == want
+
+
+def _tmp_entries(prefix):
+    return [e for e in os.listdir(tempfile.gettempdir()) if e.startswith(prefix)]
+
+
+def test_stream_relative_sf_dir_matches_oracle(spark, oracle, monkeypatch):
+    """A relative fixture dir resolves like a batch read does: from the
+    working directory the JVM was started in. A one-source query and a
+    two-source join must both read the whole fixture, not an empty
+    stream."""
+    cwd = spark._jvm.System.getProperty("user.dir")
+    monkeypatch.chdir(cwd)
+    rel = os.path.relpath(SF_SMOKE, cwd)
+    assert not os.path.isabs(rel)
+    for build, sql in ((stream_e1, STREAM_E1_SQL), (stream_join, STREAM_JOIN_SQL)):
+        got = build(spark, rel).toPandas()
+        assert_matches_oracle(got, oracle.execute(sql).fetchdf(), build.__name__)
+
+
+def test_stream_queries_leave_nothing_behind(spark, oracle):
+    """A memory-sink stream query leaves no temp view, no temp dir and no
+    running stream; its returned frame still reads the sink's rows after
+    the view is dropped."""
+
+    def footprint():
+        views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+        return views, set(_tmp_entries("events_stream_")), len(spark.streams.active)
+
+    before = footprint()
+    results = [(stream_e1(spark, SF_SMOKE), STREAM_E1_SQL), (stream_join(spark, SF_SMOKE), STREAM_JOIN_SQL)]
+    assert footprint() == before
+    for df, sql in results:
+        assert_matches_oracle(df.toPandas(), oracle.execute(sql).fetchdf())
