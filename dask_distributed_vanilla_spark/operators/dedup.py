@@ -19,13 +19,12 @@ Design for 100 TB:
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dask_distributed_vanilla_spark.catalog import load_table, spread
 from dask_distributed_vanilla_spark.functions.rounding import round2, round2_sql
+from dask_distributed_vanilla_spark.operators.graph import min_label_components
 
 # Word n-gram size, minhash width, LSH banding, and the near-dup
 # threshold (the sf fixtures are bimodal: planted near-dups sit at
@@ -517,92 +516,22 @@ def ml_minhash_pairs(spark: SparkSession, sf_dir: str, threshold: float = 0.5) -
 
 
 # --- duplicate-cluster assignment (connected components) ------------------
-def dedup_cc(spark: SparkSession, sf_dir: str, max_iter: int = 10) -> DataFrame:
+def dedup_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate clusters: connected components over the verified LSH
     near-dup pair graph, every document labeled with the minimum doc_id
     reachable through near-duplicate links (singletons label themselves).
     This is the step that turns pairwise dedup output into the
     keep-one-per-cluster decision a curation pipeline needs.
 
-    Iterative min-label propagation (the GraphX-connected-components
-    shape): each round is one shuffle keyed by node that lowers every
-    node's label to the min of its neighborhood, until a fixpoint. Rounds
-    needed = graph diameter; near-dup clusters are tiny and dense, so it
-    converges in 2-3 rounds. Per-round localCheckpoint truncates the plan
-    lineage — without it the iteration re-derives the whole LSH pipeline
-    every round. At 100 TB the same loop runs with the label table
-    hash-partitioned by node; large-star/small-star is the refinement if
-    components with million-node diameters ever appear (they don't in
-    near-dup graphs).
+    Clustering is graph.min_label_components: min-label propagation to a
+    fixpoint, one shuffle keyed by node per round. Near-dup clusters are
+    tiny and dense, so it converges in 2-3 rounds; a graph that needs
+    more than graph.MAX_LABEL_ROUNDS raises RuntimeError rather than
+    return unconverged labels.
     """
-    pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b").localCheckpoint()
-    # Size the iteration's shuffles to the measured graph, not the batch
-    # default: every round is (join + groupBy + checkpoint + probe) and
-    # pays per-task scheduling cost × partitions × rounds. pairs is
-    # already materialized, so the count is a cached-block scan. One
-    # partition per ~500k edges (floor 4) keeps fixture-scale rounds at
-    # 4 tasks and grows into the thousands at 100 TB edge volumes.
-    n_edges = pairs.count()
-    loop_parts = max(4, min(2048, n_edges // 500_000 + 4))
-    edges = pairs.union(pairs.select("doc_b", "doc_a")).toDF("src", "dst")
-    labels = (
-        load_table(spark, sf_dir, "documents")
-        .select(F.col("doc_id").alias("node"), F.col("doc_id").alias("label"))
-        .repartition(loop_parts, "node")
-        .localCheckpoint()
-    )
-    changed = 1
-    from dask_distributed_vanilla_spark.session import ITER_LOOP_AQE, scoped_conf
-
-    # AQE scoped OFF for the loop rounds: the shuffles are pre-sized to
-    # loop_parts above, so AQE's per-stage materialize-and-replan
-    # latency is pure per-round overhead here (r14 A/B at sf0.1: loop
-    # 0.82s → 0.65s; see session.ITER_LOOP_AQE for the trade).
-    with scoped_conf(
-        spark,
-        {
-            "spark.sql.shuffle.partitions": str(loop_parts),
-            "spark.sql.adaptive.enabled": ITER_LOOP_AQE,
-        },
-    ):
-        for _ in range(max_iter):
-            prop = (
-                edges.join(labels.withColumnRenamed("node", "src"), "src")
-                .groupBy("dst")
-                .agg(F.min("label").alias("nlabel"))
-                .withColumnRenamed("dst", "node")
-            )
-            # Carry a changed flag in the same propagation job: the eager
-            # localCheckpoint materializes (node, label, chg) once, so the
-            # convergence check below is an early-exit scan of cached
-            # blocks, not the extra join + full count job per round it
-            # used to be.
-            new_labels = (
-                labels.join(prop, "node", "left")
-                .select(
-                    "node",
-                    F.least(
-                        F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))
-                    ).alias("label"),
-                    (F.coalesce(F.col("nlabel"), F.col("label")) < F.col("label")).alias(
-                        "chg"
-                    ),
-                )
-                .localCheckpoint()
-            )
-            changed = new_labels.where(F.col("chg")).limit(1).count()
-            labels = new_labels.drop("chg")
-            if changed == 0:
-                break
-    if changed != 0:
-        warnings.warn(
-            f"dedup_cc: min-label propagation did not converge within "
-            f"max_iter={max_iter} rounds (component diameter exceeds the "
-            f"round budget); returned labels are NOT a fixpoint",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    return labels.select(
+    pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
+    nodes = load_table(spark, sf_dir, "documents").select("doc_id")
+    return min_label_components(pairs, nodes).select(
         F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
     ).orderBy("doc_id")
 

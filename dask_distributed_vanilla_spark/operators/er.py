@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dask_distributed_vanilla_spark.catalog import load_table
+from dask_distributed_vanilla_spark.operators.graph import min_label_components
 
 # Deletion-bucket occupancy ceiling — the FastSS analog of dedup.py's
 # DF_CAP, with one crucial difference: FastSS recall is exact by theorem
@@ -273,12 +274,11 @@ def er_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     match pairs are evidence, the golden record is the product.
 
     Scale shape: edges come from the linear FastSS signature join (never
-    n²); clustering is min-label propagation over the edge list —
-    edit-distance-1 name clusters are dense, so a few rounds with a
-    checkpointed changed-flag converge. The loop runs TO FIXPOINT
-    (changed == 0) under a generous 64-round hard cap and RAISES if the
-    cap is hit before convergence — an unconverged cluster id is a wrong
-    answer, never a warning (same iterative contract as dedup_cc).
+    n²); clustering is graph.min_label_components over the edge list —
+    edit-distance-1 name clusters are dense, so a few rounds converge.
+    The loop runs TO FIXPOINT under a 64-round cap and RAISES if the cap
+    is hit first — an unconverged cluster id is a wrong answer, never a
+    warning (the same loop and contract as dedup_cc).
     Consolidation is one groupBy over the labeled keys plus a
     broadcast-sized join back for the canonical names. Verified against
     a DuckDB oracle that derives the same pair set from the FastSS
@@ -290,76 +290,9 @@ def er_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_acctbal"
     )
-    pairs = _fastss_pairs(spark, sf_dir).localCheckpoint()
-    edges = pairs.union(
-        pairs.select(F.col("right_key").alias("left_key"), F.col("left_key").alias("right_key"))
-    ).toDF("node", "nbr")
-    labels = cust.select(F.col("c_custkey").alias("node"), F.col("c_custkey").alias("label"))
-    changed = 1
-    from dask_distributed_vanilla_spark.session import ITER_LOOP_AQE, scoped_conf
-
-    # The label table is node-sized and the edge list match-sized — 8
-    # partitions keep per-round task overhead below the work (dedup_cc's
-    # loop sizing rule), and AQE is scoped OFF for the loop rounds: with
-    # the shuffles pre-sized, AQE's per-stage materialize-and-replan
-    # latency × (3 stages × 6 rounds) was the loop's dominant cost
-    # (r14 A/B at sf0.1: 3.5s → 2.2s; see session.ITER_LOOP_AQE).
-    with scoped_conf(
-        spark,
-        {
-            "spark.sql.shuffle.partitions": "8",
-            "spark.sql.adaptive.enabled": ITER_LOOP_AQE,
-        },
-    ):
-        # Run to fixpoint: the match-graph diameter is corpus-dependent,
-        # so a fixed small budget would silently return unconverged ids
-        # on denser corpora. 64 min-label rounds cover any graph of
-        # diameter <= 64 (d<=1 name clusters are near-cliques; observed
-        # fixpoint is 6 rounds at sf0.1); hitting the cap raises below.
-        # (A pointer-jump variant — label := label-of-label per block,
-        # the oracle's shape — was measured in r13: it converges in 4
-        # blocks instead of 6 rounds but the extra join triples the
-        # per-block cost at every scale where labels fit a broadcast, so
-        # the plain round is kept deliberately.)
-        for _ in range(64):
-            prop = (
-                edges.join(labels.withColumnRenamed("node", "nbr"), "nbr")
-                .groupBy("node")
-                .agg(F.min("label").alias("nbr_label"))
-            )
-            # ONE action per round (r13 verdict item 1): the lazy
-            # localCheckpoint materializes during the convergence
-            # aggregate itself — the sum computes every partition, so
-            # all blocks persist in that same job and the former
-            # separate eager-checkpoint job disappears. The changed
-            # test stays zero/nonzero-equivalent to the old
-            # where(chg).limit(1).count().
-            new_labels = (
-                labels.join(prop, "node", "left")
-                .select(
-                    "node",
-                    F.least(F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))).alias(
-                        "label"
-                    ),
-                    (F.coalesce(F.col("nbr_label"), F.col("label")) < F.col("label")).alias("chg"),
-                )
-                .localCheckpoint(eager=False)
-            )
-            # COALESCE: sum over an empty label table is NULL, and a
-            # degenerate empty corpus must read as converged, not as a
-            # 64-round non-convergence raise
-            changed = new_labels.agg(
-                F.coalesce(F.sum(F.col("chg").cast("long")), F.lit(0)).alias("n")
-            ).first()["n"]
-            labels = new_labels.drop("chg")
-            if changed == 0:
-                break
-    if changed != 0:
-        raise RuntimeError(
-            "er_golden_record: label propagation did not reach a fixpoint "
-            "within 64 rounds — cluster ids would be unconverged (wrong), "
-            "refusing to emit them"
-        )
+    labels = min_label_components(
+        _fastss_pairs(spark, sf_dir), cust.select("c_custkey")
+    )
     g = (
         labels.join(cust, labels.node == cust.c_custkey)
         .groupBy(F.col("label").alias("cluster_id"))

@@ -1,9 +1,12 @@
-"""Graph analytics over a derived co-occurrence graph.
+"""Graph analytics over a derived co-occurrence graph, and the engine's
+one connected-components loop.
 
-Completes the graph story next to the dedup suite's connected
-components (`operators/dedup.py::dedup_cc`): triangle counting and the
-global clustering coefficient over the user co-occurrence graph (users
-sharing an (event_type, minute) cell are connected).
+`min_label_components` labels every node of an undirected pair graph
+with the minimum node id of its component; dedup_cc (near-dup clusters)
+and er_golden_record (entity clusters) both run on it. The queries here
+count triangles and the global clustering coefficient over the user
+co-occurrence graph (users sharing an (event_type, minute) cell are
+connected), its degree histogram and its PageRank.
 
 The Spark plan uses the degree-ordered orientation algorithm
 (Cohen's MapReduce triangle counting): orient every edge from its
@@ -23,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dask_distributed_vanilla_spark.catalog import load_table
+from dask_distributed_vanilla_spark.session import ITER_LOOP_AQE, free_checkpoint, scoped_conf
 
 
 # A co-occurrence cell holding k users yields k² pairs: one viral cell
@@ -280,15 +284,103 @@ FROM deg GROUP BY 1 ORDER BY 1
 """
 
 
+# Round cap of the min-label loop. Rounds needed = component diameter:
+# d<=1 name clusters and near-dup clusters are near-cliques (observed
+# fixpoint: 6 rounds for er_golden_record at sf0.1, 2-3 for dedup_cc), so
+# 64 covers any component of diameter <= 64; hitting it raises.
+MAX_LABEL_ROUNDS = 64
+
+
+def min_label_components(pairs: DataFrame, nodes: DataFrame) -> DataFrame:
+    """Connected components by min-label propagation (the GraphX
+    connected-components shape): ``(node, label)`` for every node of
+    ``nodes`` (a one-column frame of ids), label = the minimum id
+    reachable through the undirected ``pairs`` (a two-column frame, each
+    edge once). Singletons label themselves.
+
+    Each round is one shuffle keyed by node that lowers every node's
+    label to the min of its neighborhood, run TO FIXPOINT (no label
+    changed). Hitting ``MAX_LABEL_ROUNDS`` first raises RuntimeError:
+    an unconverged label is a wrong answer, never a warning. At 100 TB
+    the same loop runs with the label table hash-partitioned by node;
+    large-star/small-star is the refinement if components with
+    million-node diameters ever appear (they don't in near-dup or d<=1
+    name graphs). A pointer-jump variant (label := label-of-label per
+    block) was measured in r13: it converges in 4 blocks instead of 6
+    rounds but the extra join triples the per-block cost at every scale
+    where labels fit a broadcast, so the plain round is kept.
+
+    Each round's labels are a localCheckpoint (the lineage would
+    otherwise re-derive the pair pipeline every round), and round k's
+    blocks are freed once round k+1 is materialized; the pair checkpoint
+    is freed after the loop. Only the returned frame's blocks remain.
+    """
+    spark = pairs.sparkSession
+    pairs = pairs.toDF("a", "b").localCheckpoint(eager=False)
+    try:
+        # Size the loop's shuffles to the measured graph, not the batch
+        # default: every round pays per-task scheduling cost × partitions.
+        # The count also fills the pair checkpoint. One partition per
+        # ~500k edges (floor 4) keeps fixture-scale rounds at 4 tasks and
+        # grows into the thousands at 100 TB edge volumes.
+        n_edges = pairs.count()
+        parts = max(4, min(2048, n_edges // 500_000 + 4))
+        edges = pairs.union(pairs.select("b", "a")).toDF("node", "nbr")
+        labels = nodes.toDF("node").select("node", F.col("node").alias("label"))
+        done = None  # the last materialized round's checkpoint
+        # AQE scoped OFF for the rounds: the shuffles are pre-sized above,
+        # so AQE's per-stage replan latency is pure per-round overhead
+        # (see session.ITER_LOOP_AQE).
+        with scoped_conf(
+            spark,
+            {"spark.sql.shuffle.partitions": str(parts), "spark.sql.adaptive.enabled": ITER_LOOP_AQE},
+        ):
+            for _ in range(MAX_LABEL_ROUNDS):
+                prop = (
+                    edges.join(labels.withColumnRenamed("node", "nbr"), "nbr")
+                    .groupBy("node")
+                    .agg(F.min("label").alias("nbr_label"))
+                )
+                nbr_label = F.coalesce(F.col("nbr_label"), F.col("label"))
+                new = (
+                    labels.join(prop, "node", "left")
+                    .select(
+                        "node",
+                        F.least(F.col("label"), nbr_label).alias("label"),
+                        (nbr_label < F.col("label")).alias("chg"),
+                    )
+                    .localCheckpoint(eager=False)
+                )
+                # ONE action per round (r13 verdict item 1): the sum reads
+                # every partition, so the lazy checkpoint fills in this
+                # same job. COALESCE: the sum over an empty label table is
+                # NULL, and an empty graph must read as converged.
+                changed = new.agg(
+                    F.coalesce(F.sum(F.col("chg").cast("long")), F.lit(0)).alias("n")
+                ).first()["n"]
+                if done is not None:
+                    free_checkpoint(done)
+                done, labels = new, new.drop("chg")
+                if changed == 0:
+                    return labels
+        free_checkpoint(done)
+        raise RuntimeError(
+            f"min-label propagation did not reach a fixpoint within "
+            f"{MAX_LABEL_ROUNDS} rounds: component labels would be wrong"
+        )
+    finally:
+        free_checkpoint(pairs)
+
+
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the user co-occurrence graph — five damped
     power-iteration rounds (d=0.85), ranks reported mean-normalized
     (×n, so 1.0 = average) to keep the values comparison-meaningful.
 
-    The iterative shape mirrors dedup_cc's contract: the edge list is
-    localCheckpointed ONCE and reused by every round (5 shuffles keyed
-    by src/dst, no lineage growth), per-round ranks checkpoint eagerly
-    so round k+1's plan starts from materialized partitions, and the
+    The edge list is localCheckpointed ONCE and reused by every round
+    (5 shuffles keyed by src/dst, no lineage growth), per-round ranks
+    checkpoint eagerly so round k+1's plan starts from materialized
+    partitions (only the final ranks' blocks outlive the build), and the
     graph size n rides the plan as a broadcast 1-row cross join —
     nothing materializes on the driver. The undirected co-occurrence
     graph has no dangling nodes (every node has an edge), so the
@@ -358,9 +450,15 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 3 jobs instead of 5. Algebraically the identical recurrence; the
     # judged hash is unchanged (A/B'd: loop 2.05s -> 1.90s at sf0.1,
     # same output hash on every run).
+    done = [ed, nodes]
     for _ in range(2):
         ranks = _round(_round(ranks)).localCheckpoint()
+        done.append(ranks)
     ranks = _round(ranks).localCheckpoint()
+    # the final ranks are materialized and read nothing else: free the
+    # loop-invariant frames and the intermediate rounds
+    for ckpt in done:
+        free_checkpoint(ckpt)
     return ranks.select(
         F.col("id").alias("user_id"),
         (F.floor((F.col("r") * F.col("n")) * 10000 + F.lit(0.5)) / 10000).alias("pr"),

@@ -30,7 +30,7 @@ from __future__ import annotations
 import os
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # The directory holding this package, which the Python workers need on
 # their path to start the daemon below.
@@ -71,17 +71,16 @@ _DEFAULTS = {
 
 # AQE inside iterative fixpoint loops (min-label propagation, gradient
 # steps): each loop round is a small query over node/weight-sized frames
-# whose shuffle sizes are KNOWN and pinned by the loop (see the 8/4
-# partition sizing comments at the call sites), so AQE's stage-by-stage
+# whose shuffle sizes are KNOWN and pinned by the loop (see
+# operators.graph.min_label_components), so AQE's stage-by-stage
 # materialize-and-replan cycle buys nothing and its per-stage driver
 # latency multiplies by rounds × stages — measured r14 at sf0.1:
 # er_golden_record's 6-round loop 3.5s → 2.2s, text_logreg's 5 steps
 # ~3.1s → ~2.5s, dedup_cc 0.82s → 0.65s with AQE scoped off; the
 # surrounding query (pair build, consolidation) keeps AQE. The latency
 # is per ROUND, so the saving grows with rounds, not with core count —
-# the same trade holds on a cluster; flip here if a deployment's loop
-# frames are large enough for runtime re-planning to win back.
-ITER_LOOP_AQE = os.environ.get("SPARK_GRAFT_ITER_AQE", "false")
+# the same trade holds on a cluster.
+ITER_LOOP_AQE = "false"
 
 
 @contextmanager
@@ -97,6 +96,13 @@ def scoped_conf(spark: SparkSession, confs: dict[str, str]):
     finally:
         for k, v in old.items():
             spark.conf.set(k, v)
+
+
+def free_checkpoint(df: DataFrame) -> None:
+    """Release the blocks of a ``localCheckpoint`` frame (its plan is a
+    ``LogicalRDD``), blocking until they are gone. Only for a checkpoint
+    nothing reads any more: a later read of ``df`` fails."""
+    df._jdf.logicalPlan().rdd().unpersist(True)
 
 
 def get_spark(app_name: str = "ddvs", master: str | None = None, **conf: str) -> SparkSession:

@@ -4,6 +4,8 @@ exact handwritten operators instead."""
 
 from __future__ import annotations
 
+import pytest
+
 from dask_distributed_vanilla_spark.operators.dedup import dedup_ngram_jaccard, ml_minhash_pairs
 from dask_distributed_vanilla_spark.operators.multimodal import frame_sample
 from dask_distributed_vanilla_spark.operators.similarity import ann_cosine_topk, ivf_kmeans_search
@@ -47,20 +49,23 @@ def test_ngram_df_cap_drops_stop_shingles(spark, monkeypatch):
     assert dedup.dedup_ngram_jaccard(spark, SF_SMOKE).count() == 0
 
 
-def test_dedup_cc_warns_when_not_converged(spark):
-    """A round budget smaller than the graph diameter must surface a
-    RuntimeWarning instead of silently returning non-fixpoint labels."""
-    import warnings
+def test_min_label_components_raises_when_not_converged(spark, monkeypatch):
+    """A path graph needs more rounds than a cap of 1: the loop must
+    raise (dedup_cc and er_golden_record run on it) instead of returning
+    non-fixpoint labels, and free its checkpoints on the way out."""
+    from dask_distributed_vanilla_spark.operators import graph
 
-    from dask_distributed_vanilla_spark.operators.dedup import dedup_cc
-
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        dedup_cc(spark, SF_SMOKE, max_iter=1).count()
-    assert any(
-        issubclass(x.category, RuntimeWarning) and "converge" in str(x.message)
-        for x in w
-    )
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (3, 4)], "a long, b long")
+    nodes = spark.range(1, 6).toDF("node")
+    assert sorted(graph.min_label_components(pairs, nodes).collect()) == [
+        (1, 1), (2, 1), (3, 1), (4, 1), (5, 5)
+    ]
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs())
+    monkeypatch.setattr(graph, "MAX_LABEL_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="fixpoint"):
+        graph.min_label_components(pairs, nodes)
+    assert set(jsc.getPersistentRDDs()) == before
 
 
 def test_e18_approx_distinct_error_bound(spark):
@@ -140,6 +145,19 @@ def test_pagerank_mass_conserved(spark):
     total = sum(r.pr for r in rows)
     assert abs(total - n) < 0.01 * n
     assert all(r.pr > 0 for r in rows)
+
+
+def test_pagerank_keeps_only_the_final_ranks(spark):
+    """The edge list, node table and intermediate rank checkpoints are
+    freed once the final ranks are materialized: one persistent RDD
+    outlives the build, and the result still reads."""
+    from dask_distributed_vanilla_spark.operators.graph import graph_pagerank
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs())
+    ranks = graph_pagerank(spark, SF_SMOKE)
+    assert len(set(jsc.getPersistentRDDs()) - before) == 1
+    assert ranks.count() > 0
 
 
 def test_graph_cell_cap_drops_hot_cells(spark, monkeypatch):

@@ -9,6 +9,9 @@ Times the same action as bench.py (plan build -> collect) at
 $SPARK_GRAFT_SF_DIR (default sf0.1), after the same whole-suite input
 warm-up, and optionally writes .explain("formatted") per query to
 <plans-to>/<name>_<suffix>.txt (the judge-facing before/after evidence).
+Each record also carries the session's block storage after the query's
+runs (`rdds`: persistent RDDs with stored blocks, `block_mb`: their
+memory + disk size), so a query that leaves checkpoints behind shows.
 """
 
 from __future__ import annotations
@@ -46,6 +49,7 @@ def main() -> None:
     queries = all_queries()
     names = sorted(queries) if args.all else args.names
     reps = 1 if args.all else args.reps
+    jsc = spark.sparkContext._jsc.sc()
     out: dict[str, list[float]] = {}
     for name in names:
         spark.sparkContext.setJobDescription(name)
@@ -60,7 +64,12 @@ def main() -> None:
             dest = Path(args.plans_to)
             dest.mkdir(parents=True, exist_ok=True)
             (dest / f"{name}_{args.suffix}.txt").write_text(formatted_plan(df))
-        print(json.dumps({name: runs, "best": min(runs)}), flush=True)
+        infos = jsc.getRDDStorageInfo()
+        block_mb = sum(i.memSize() + i.diskSize() for i in infos) / 1e6
+        print(
+            json.dumps({name: runs, "best": min(runs), "rdds": len(infos), "block_mb": round(block_mb, 1)}),
+            flush=True,
+        )
     print(json.dumps({"total_best": round(sum(min(r) for r in out.values()), 3)}))
 
 
