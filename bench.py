@@ -1,65 +1,33 @@
 """Benchmark harness: every registered query at $SPARK_GRAFT_SF_DIR.
 
 Protocol (BASELINE.md): per query, wall-clock of plan build → execute →
-collect, median AND best of $BENCH_REPS runs (default 3) after one
-warm-up of the whole suite's input scans.
+collect, median AND best of $BENCH_REPS runs (default 3, extended to
+SUBSEC_REPS when the median is under a second) after one warm-up of the
+whole suite's input scans. Best-of is the comparison number between
+records: co-load on the host only ever adds time, so min() is the
+estimator it contaminates least.
 
-Co-load robustness (round-7, after three straight rounds in which
-driver-host co-load wrote phantom >2× per-query "regressions" into the
-permanent record on frozen code): (1) every query records BOTH the
-median and the BEST of its reps — best-of is the round-over-round
-comparison number, because co-load only ever ADDS time, so min() is the
-estimator least contaminated by a noisy neighbor; (2) a fixed 32-core
-calibration probe runs before and after the suite and is compared to a
-committed idle-box reference — when the probe says the box was loaded,
-the budget verdict is recorded as indeterminate (null) instead of a
-fake pass/fail.
+Co-load check: one all-core CPU probe, sized to the session's core
+count, runs before the suite, after every SEGMENT_SIZE-query segment of
+the alphabetical run order, and after the suite. Its reference is the
+lowest reading of the run, or the reference of the committed record
+(bench_last_full.json) when that record has the same sf and core count.
+The run is co-loaded when either end of any bracket reads more than
+COLOAD_RATIO × the reference; an over-budget verdict is then null
+(indeterminate) instead of a pass/fail measured on a loaded box.
 
-I/O decoupling (round-8, after the r07 stream-family geomean stepped
-2.1s → 5.4s best-of on code untouched since round 5 while the all-core
-CPU probe read clean — the signature of DISK-side contention, which
-streaming twins sense through state-store commits and checkpoint
-fsyncs): (1) bench runs point the streaming checkpoint/state-store
-default, Spark's shuffle-spill local dir, and the Python scratch dir at
-tmpfs (/dev/shm), so the committed record measures the engine, not the
-driver host's disk (gate off with SPARK_GRAFT_BENCH_TMPFS=0; the
-driver's CORRECTNESS gate builds its own session and keeps durable
-dirs); (2) the calibration bracket gains an I/O microprobe — best-of-3
-of a 32×4KiB write+fsync loop on the DISK filesystem — plus an
-availableNow rate-stream canary with a disk checkpoint, recorded
-pre+post, so any future step-change in wall-clock is attributable to
-CPU vs I/O from the record alone.
+Riser re-check: a co-load burst shorter than a segment can inflate
+every rep of a few queries between two clean probes, so any query whose
+best-of exceeds RISER_RATIO × its best in the same-host record is
+re-measured once at the end of the suite and min-merged: phantom risers
+fall, real regressions re-measure slow and stay.
 
-Mid-suite contamination defense (round-9, after the official r08
-record shipped ~7 TPC-H/ANN rows inflated 2-3.7× by co-load that hit
-MID-suite — the pre/post-suite-only bracket read 0.92 and was
-structurally blind to a transient in the middle), two layers:
-(1) SEGMENT BRACKETS — queries run in the same alphabetical order as
-every prior record (execution position is part of the number: a
-family-grouped reorder trial moved the JVM-warm-up tax from a*/b*
-onto whichever family ran first and broke round-over-round
-comparability), and the CPU + I/O probes bracket every ~25-query
-segment (each segment's pre-probe is the previous one's post, one
-warm best-of-2 probe per segment). A segment whose bracket exceeds
-the tighter RECORD_CALIB_RATIO (1.15) or the I/O gate is re-run once;
-the record keeps the cleaner-probed run-set for the median while
-best-of spans both, with ratios in segment_calib.
-(2) RISER RE-CHECK — a burst shorter than a segment can inflate every
-rep of a few queries between two clean probes (observed ~1.5-3×), so
-any query whose fresh best-of exceeds 1.5× its committed
-previous-record best (same sf) is re-measured once at the end of the
-suite and min-merged: phantom risers fall, real regressions
-re-measure slow and stay.
-The /tmp I/O probe reports None (indeterminate) when /tmp is itself
-tmpfs, and shuffle spill stays on disk at sf >= 1 (round-8 ADVICE).
-
-Output contract (truncation-proof — the driver keeps only the LAST
-~2,000 chars of stdout, which in round 3 cut the 176-query JSON and
-left BENCH_r03 undiagnosable): the FULL result (all per-query timings +
-aux) is printed first on its own line, and the FINAL line is a compact
-(<1,500 char) complete JSON with the suite total, per-family geomeans,
-the top-10 slowest queries (as the "queries" dict), and the budget
-flag. Whichever line survives, the round is diagnosable.
+Output contract: a caller may keep only the last ~2,000 chars of stdout,
+so the FULL record (every per-query timing, the probe readings, aux) is
+printed first on its own line and written to bench_last_full.json, and
+the FINAL line is a compact JSON of at most COMPACT_LINE_BUDGET chars:
+the totals, per-family geomeans, the scalar config and verdicts, and as
+many of the slowest queries as fit.
 """
 
 from __future__ import annotations
@@ -80,209 +48,92 @@ from dask_distributed_vanilla_spark.session import get_spark
 
 # Suite-total drift budget at the driver's sf0.1 / local[32] config.
 # Methodology: idle-box measurement × 1.5. Round-4 idle measurement:
-# 167.4s over the 176-query suite (load avg ≤ 2 throughout; r03 idle
-# was 164.6s over 172 — growth is the added queries, no per-query
-# regression). Round 3's driver run exceeded the then-budget of
-# idle+25% (210s) while the same code measured 164.6s idle — the
-# driver host runs the round's own machinery (copy/leak checks, DuckDB
-# oracles) concurrently, so headroom is now 50%. The compact final
-# summary line carries per-family geomeans, making any overrun
-# attributable instead of opaque.
-#
-# Round-3→4 text-family note (verdict item): text_quality/stats/
-# fingerprint drifted +18-34% inside the r03 full-suite run but
-# measure AT or BELOW their r02 times in a fresh session (quality
-# 0.47s, fingerprint 0.94s, stats 0.62s, 7 reps) — the drift is
-# suite-position/JVM-session pressure from the ~150 queries that now
-# precede text_* alphabetically, not a code regression.
+# 167.4s over the 176-query suite (load avg ≤ 2 throughout). A shared
+# host runs other work (copy/leak checks, DuckDB oracles) concurrently,
+# so headroom is 50%.
 SUITE_BUDGET_SEC = 255.0
 SUBSEC_REPS = 5
 
-# Idle-box reference for the calibration probe: best-of-6 = 0.905s,
-# measured round 7 at load avg ~2 (runs 0.905-1.0s after the first-run
-# codegen compile). The probe is a fixed all-core Spark job, so its
-# slowdown vs this reference estimates how much of the box a co-tenant
-# (driver machinery: copy/leak checks, DuckDB oracles) was holding.
-# Sensitivity check (round 7): 16 busy-spin processes (half the box)
-# move best-of-3 to 1.27s = ratio 1.41, comfortably over the gate,
-# while same-session idle repeats stay within ±6%. Above COLOAD_RATIO
-# the suite numbers are contaminated and the budget verdict is
-# recorded as null/indeterminate rather than a fake pass/fail.
-CALIB_IDLE_SEC = 0.90
+# A bracket whose slower end reads over this multiple of the reference
+# probe marks the run co-loaded. Sensitivity check (round 7, 32 cores):
+# 16 busy-spin processes (half the box) moved the probe 1.41×, while
+# same-session idle repeats stay within ±6%.
 COLOAD_RATIO = 1.30
-
-# Idle-box reference for the DISK I/O microprobe: best-of-3 of a
-# 32×(4KiB write + fsync) loop on /tmp (ext4-on-vda, the filesystem
-# streaming checkpoints lived on before the tmpfs decoupling), measured
-# round 8 at load avg 0.1: 0.043-0.097s across sessions (fsync latency
-# jitters ~2× even idle, hence the loose 4× gate — real contention
-# moves fsync 10-100×). tmpfs reference for comparison: 0.0004s.
-IO_IDLE_SEC = 0.045
-IO_COLOAD_RATIO = 4.0
-
-# Segment record gate (round-9, after the official r08 record shipped
-# ~7 TPC-H/ANN rows inflated 2-3.7× by co-load that hit MID-suite — a
-# pre/post-suite-only bracket read 0.92 and was structurally blind to
-# it). Probes now bracket every ~25-query segment of the (historical,
-# alphabetical) run order; a segment whose bracket exceeds this tighter
-# ratio (or the I/O gate) is re-run once and the record keeps whichever
-# run-set probed cleaner. 1.15 sits above same-session idle repeat
-# jitter (±6%, round-7 sensitivity check) and below the smallest
-# contamination worth acting on.
-RECORD_CALIB_RATIO = 1.15
 SEGMENT_SIZE = 25
 
-# Riser re-check (round-9): a co-load burst SHORTER than a segment can
-# inflate every rep of a few queries while both adjacent probes read
-# clean (observed: ~1.5-3× on all reps with brackets at 0.91/1.48).
-# Any query whose fresh best-of exceeds RISER_RATIO × its committed
-# previous-record best (same sf, bench_last_full.json) is re-measured
-# once at the END of the suite; min-merge keeps the cleaner number, so
-# only phantom risers fall while a real regression re-measures slow
-# and stays. The floor skips sub-0.3s noise-band queries.
+# Riser re-check: re-measure a query whose best-of exceeds RISER_RATIO ×
+# its same-host record best; the floor skips sub-0.3s noise-band queries.
 RISER_RATIO = 1.5
 RISER_FLOOR_SEC = 0.3
 
-# Byte budget for the FINAL compact stdout line (r14): the driver keeps
-# only the last ~2,000 chars of stdout (round-3 truncation incident), so
-# the line fills its "queries" dict with as many of the slowest queries
-# as fit under this with margin — never fewer than the historical 10 —
-# instead of a fixed top-10 that hid real wins as "dropped_from_bench"
-# (r13 verdict item 3). The full dicts always go to the first line and
-# bench_last_full.json.
+# Byte budget for the FINAL compact stdout line: a caller may keep only
+# the last ~2,000 chars of stdout (round-3 truncation incident).
 COMPACT_LINE_BUDGET = 1900
 
 
-def _previous_record_best(sf: float) -> dict[str, float]:
-    """Per-query best-of from the committed previous record
-    (bench_last_full.json), empty when absent or at a different scale
-    factor — the riser re-check only compares like with like."""
+def _previous_record(sf: float, cores: int) -> dict:
+    """The committed record (bench_last_full.json) when it was taken at
+    this scale factor on this many cores, else {}: the riser re-check
+    and the probe reference compare like with like."""
     try:
         rec = json.loads(
             (Path(__file__).resolve().parent / "bench_last_full.json").read_text()
         )
     except (OSError, ValueError):
         return {}
-    if not isinstance(rec, dict) or rec.get("sf") != sf:
+    if not isinstance(rec, dict) or rec.get("sf") != sf or rec.get("cores") != cores:
         return {}
-    prev = rec.get("queries_best")
-    return prev if isinstance(prev, dict) else {}
+    return rec
 
 
 def _calibration_probe(spark, reps: int = 3) -> float:
     """Best-of-`reps` wall time of a fixed all-core CPU-bound Spark job:
-    sum of (id%1000)*(id%7) over a 4B-row range — shuffle-free,
-    input-free, ANSI-overflow-safe (≤ 6000·4e9 ≪ 2^63), so variance is
+    sum of (id%1000)*(id%7) over 125M rows per core (4B rows at 32
+    cores) — shuffle-free, input-free, ANSI-overflow-safe, so variance is
     pure scheduler/CPU contention. Best-of because co-load only adds
-    time; the first rep absorbs codegen compile (inter-family probes run
-    warm and use reps=2 to bound the bracketing overhead)."""
+    time; the first rep absorbs codegen compile."""
+    rows = 4_000_000_000 * spark.sparkContext.defaultParallelism // 32
     best = float("inf")
     for _ in range(reps):
         t0 = time.perf_counter()
-        spark.range(4_000_000_000).selectExpr(
-            "sum((id % 1000) * (id % 7))"
-        ).collect()
+        spark.range(rows).selectExpr("sum((id % 1000) * (id % 7))").collect()
         best = min(best, time.perf_counter() - t0)
     return round(best, 3)
 
 
-def _tmp_is_tmpfs() -> bool:
-    """True when /tmp itself is RAM-backed (tmpfs/ramfs) — then the I/O
-    microprobe has no disk to sense (round-8 ADVICE: it would read
-    ~0.0004s, the ratio would sit near zero, and the I/O co-load gate
-    would silently never fire against a host-specific IO_IDLE_SEC). The
-    probe reports None/indeterminate in that case."""
-    try:
-        real = os.path.realpath("/tmp")
-        best_mnt, fstype = "", ""
-        with open("/proc/mounts") as fh:
-            for line in fh:
-                parts = line.split()
-                if len(parts) < 3:
-                    continue
-                mnt = parts[1]
-                if (real == mnt or real.startswith(mnt.rstrip("/") + "/")) and len(
-                    mnt
-                ) > len(best_mnt):
-                    best_mnt, fstype = mnt, parts[2]
-        if best_mnt:
-            return fstype in ("tmpfs", "ramfs")
-        # no /proc/mounts match: fall back to device identity vs /dev/shm
-        return os.path.isdir("/dev/shm") and (
-            os.stat("/tmp").st_dev == os.stat("/dev/shm").st_dev
-        )
-    except OSError:
-        return False
+def _coload(probes: list[float], prev_ref: float | None) -> dict:
+    """Judge a run from its probe readings, in run order (before the
+    suite, each segment boundary, after it). The reference is the lowest
+    reading, or `prev_ref` (the same-host record's reference) when that
+    is lower; bracket i spans probes i and i+1, and its ratio is its
+    slower end over the reference."""
+    ref = min(probes + ([prev_ref] if prev_ref else []))
+    ratios = [round(max(a, b) / ref, 3) for a, b in zip(probes, probes[1:])]
+    ratio = max(ratios)
+    return {
+        "ref_sec": ref,
+        "prev_ref_sec": prev_ref,
+        "probes_sec": probes,
+        "bracket_ratios": ratios,
+        "ratio": ratio,
+        "coloaded": ratio > COLOAD_RATIO,
+    }
 
 
-def _io_probe() -> float | None:
-    """Best-of-3 wall time of a fixed small-file fsync workload on the
-    DISK filesystem (/tmp, deliberately NOT the bench tmpfs): 32 ×
-    (4 KiB write + fsync) + unlink. Senses the I/O-side contention
-    (checkpoint/state-store fsyncs from a co-tenant, driver-host
-    writers) that the all-core CPU probe is structurally blind to —
-    the r07 stream-family step-change's failure mode. Returns None
-    (ratio indeterminate, never a fake pass) when /tmp is tmpfs."""
-    import tempfile
-
-    if _tmp_is_tmpfs():
-        return None
-
-    payload = b"\0" * 4096
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        with tempfile.TemporaryDirectory(dir="/tmp", prefix="ddvs_ioprobe_") as d:
-            for i in range(32):
-                fd = os.open(os.path.join(d, f"f{i}"), os.O_CREAT | os.O_WRONLY, 0o600)
-                os.write(fd, payload)
-                os.fsync(fd)
-                os.close(fd)
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 4)
-
-
-def _stream_canary(spark) -> float:
-    """Best-of-3 wall time of an (effectively empty) availableNow
-    rate-stream with its checkpoint on the DISK filesystem — exercises
-    the real micro-batch machinery (offset log, commit log, state-store
-    dir churn: many small creates + fsyncs + renames) end to end.
-    Recorded for attribution, not gated: its idle floor (~0.42s) is
-    dominated by trigger scheduling, so the fsync share is better
-    isolated by _io_probe."""
-    import shutil
-    import tempfile
-
-    best = float("inf")
-    for _ in range(3):
-        ckpt = tempfile.mkdtemp(dir="/tmp", prefix="ddvs_canary_")
-        try:
-            t0 = time.perf_counter()
-            q = (
-                spark.readStream.format("rate")
-                .option("rowsPerSecond", "1")
-                .load()
-                .writeStream.format("noop")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            best = min(best, time.perf_counter() - t0)
-        finally:
-            shutil.rmtree(ckpt, ignore_errors=True)
-    return round(best, 3)
+def _verdict(total: float, coloaded: bool) -> bool | None:
+    """Over budget? None when a co-loaded run went over: the overrun
+    cannot be put down to the code."""
+    if total <= SUITE_BUDGET_SEC:
+        return False  # under budget even with co-load on top
+    return None if coloaded else True
 
 
 def _tmpfs_scratch() -> str | None:
     """Point all bench-run scratch at tmpfs so the committed record
     measures the engine, not the host's disk: streaming checkpoint +
     state-store default, Spark local dir (shuffle spill), and the
-    Python tempfile root (the twins' file-stream source symlink dirs
-    and the incremental-MV sink). Returns the base dir to clean up, or
-    None when gated off / no tmpfs."""
-    if os.environ.get("SPARK_GRAFT_BENCH_TMPFS", "1") == "0":
-        return None
+    Python tempfile root (the incremental-MV sink). Returns the base dir
+    to clean up, or None when there is no writable tmpfs."""
     shm = "/dev/shm"
     if not os.path.isdir(shm) or not os.access(shm, os.W_OK):
         return None
@@ -309,24 +160,22 @@ def main() -> None:
         tempfile.tempdir = os.path.join(scratch, "scratch")
         os.environ["TMPDIR"] = tempfile.tempdir
         conf["spark.sql.streaming.checkpointLocation"] = os.path.join(scratch, "ckpt")
-        # shuffle spill stays on DISK at sf >= 1 (round-8 ADVICE): at
-        # large scale factors spill could exhaust tmpfs/RAM and fail the
-        # run rather than degrade; checkpoint/state-store + Python
-        # scratch (small, fsync-bound) keep the tmpfs decoupling.
+        # shuffle spill stays on DISK at sf >= 1: at large scale factors
+        # spill could exhaust tmpfs/RAM and fail the run rather than
+        # degrade
         if sf < 1.0:
             conf["spark.local.dir"] = os.path.join(scratch, "local")
 
     spark = get_spark("bench", **conf)
     spark.sparkContext.setLogLevel("ERROR")
+    cores = spark.sparkContext.defaultParallelism
+    prev = _previous_record(sf, cores)
 
     # warm-up: touch every input once (JVM/codegen/file-footer caches)
     for t in TABLES:
         load_table(spark, sf_dir, t).count()
 
-    calib_pre = _calibration_probe(spark)
-    io_pre = _io_probe()
-    canary_pre = _stream_canary(spark)
-
+    probes = [_calibration_probe(spark)]
     queries = all_queries()
     names = sorted(queries)
 
@@ -348,80 +197,28 @@ def main() -> None:
             out[name] = runs
         return out
 
-    def _bracket_ratios(
-        pre_cpu: float, post_cpu: float, pre_io: float | None, post_io: float | None
-    ) -> tuple[float | None, float | None]:
-        cpu = (
-            round(max(pre_cpu, post_cpu) / CALIB_IDLE_SEC, 3) if CALIB_IDLE_SEC else None
-        )
-        ios = [v for v in (pre_io, post_io) if v is not None]
-        io = round(max(ios) / IO_IDLE_SEC, 3) if ios and IO_IDLE_SEC else None
-        return cpu, io
-
-    # Segment probe bracketing (round-9): the r08 contamination hit
-    # MID-suite, invisible to a pre/post-suite-only bracket (it read
-    # 0.92 while ~7 rows inflated 2-3.7×). Queries run in the SAME
-    # alphabetical order as every prior record (execution position is
-    # part of the number — a family-grouped reorder trial moved the
-    # JVM-warm-up tax from a*/b* onto whichever family ran first and
-    # broke round-over-round comparability); fixed ~25-query segments
-    # are bracketed by CPU+I/O probes (each segment's pre is the
-    # previous one's post). A bracket over the tighter
-    # RECORD_CALIB_RATIO (or the I/O gate) re-runs the segment once,
-    # and the record keeps whichever run-set probed cleaner for the
-    # median while best-of spans both.
+    # Queries run in the same alphabetical order as every prior record
+    # (execution position is part of the number: a family-grouped
+    # reorder trial moved the JVM-warm-up tax onto whichever family ran
+    # first), and a warm best-of-2 probe closes each segment, so co-load
+    # in mid-suite shows in that segment's bracket.
     timings: dict[str, float] = {}
     best: dict[str, float] = {}
-    segment_calib: list[dict] = []
-    segments = [
-        names[i : i + SEGMENT_SIZE] for i in range(0, len(names), SEGMENT_SIZE)
-    ]
-    prev_cpu, prev_io = calib_pre, io_pre
-    for seg in segments:
-        runs_a = _run_protocol(seg)
-        mid_cpu, mid_io = _calibration_probe(spark, reps=2), _io_probe()
-        cpu_a, io_a = _bracket_ratios(prev_cpu, mid_cpu, prev_io, mid_io)
-        contaminated = (cpu_a is not None and cpu_a > RECORD_CALIB_RATIO) or (
-            io_a is not None and io_a > IO_COLOAD_RATIO
-        )
-        rec: dict = {
-            "span": f"{seg[0]}..{seg[-1]}",
-            "ratio": cpu_a,
-            "io_ratio": io_a,
-            "reran": contaminated,
-        }
-        chosen = runs_a
-        if contaminated:
-            runs_b = _run_protocol(seg)
-            end_cpu, end_io = _calibration_probe(spark, reps=2), _io_probe()
-            cpu_b, io_b = _bracket_ratios(mid_cpu, end_cpu, mid_io, end_io)
-            rec["ratio_rerun"], rec["io_ratio_rerun"] = cpu_b, io_b
-            if cpu_b is not None and (cpu_a is None or cpu_b <= cpu_a):
-                chosen = runs_b
-                rec["kept"] = "rerun"
-            else:
-                rec["kept"] = "first"
-            prev_cpu, prev_io = end_cpu, end_io
-        else:
-            prev_cpu, prev_io = mid_cpu, mid_io
-        for name in seg:
-            timings[name] = round(statistics.median(chosen[name]), 3)
-            all_runs = runs_a[name] + (runs_b[name] if contaminated else [])
-            best[name] = round(min(all_runs), 3)
-        segment_calib.append(rec)
+    spans: list[str] = []
+    for i in range(0, len(names), SEGMENT_SIZE):
+        seg = names[i : i + SEGMENT_SIZE]
+        for name, runs in _run_protocol(seg).items():
+            timings[name] = round(statistics.median(runs), 3)
+            best[name] = round(min(runs), 3)
+        probes.append(_calibration_probe(spark, reps=2))
+        spans.append(f"{seg[0]}..{seg[-1]}")
 
-    # Riser re-check (round-9): segment brackets cannot see a co-load
-    # burst shorter than a segment that lands between two clean probes
-    # — the r08 failure mode reproduced in the reorder trial (all reps
-    # of several queries inflated ~1.5-3× while both adjacent probes
-    # read clean). The queries themselves are the most sensitive
-    # detector: any query whose fresh best-of lands > RISER_RATIO × its
-    # committed previous-record best (same sf) is re-measured once at
-    # the end of the suite, when the burst has typically passed, and
-    # the record keeps the cleaner run. A REAL regression re-measures
-    # just as slow and stays in the record; only phantom risers fall.
+    # Riser re-check: the queries themselves are the most sensitive
+    # detector of a burst shorter than a segment. Re-measure each riser
+    # once at the end of the suite, when the burst has typically passed,
+    # and keep the cleaner run.
     rechecked: dict[str, dict] = {}
-    prev_best = _previous_record_best(sf)
+    prev_best = prev.get("queries_best", {})
     risers = [
         n
         for n in names
@@ -442,49 +239,19 @@ def main() -> None:
             best[n] = min(best[n], new_best)
             timings[n] = min(timings[n], new_med)
 
-    calib_post = _calibration_probe(spark)
-    io_post = _io_probe()
-    canary_post = _stream_canary(spark)
+    probes.append(_calibration_probe(spark))
+    spans.append("recheck..post")
+    calib = _coload(probes, prev.get("calib", {}).get("ref_sec"))
 
     total = round(sum(timings.values()), 3)
     total_best = round(sum(best.values()), 3)
-    # Budget verdict: computed on best-of (least co-load-contaminated)
-    # and only asserted when BOTH probes (CPU + disk I/O) say the box
-    # was near idle on BOTH sides of the run; otherwise null
-    # (indeterminate — a co-loaded box can't fail the budget).
-    calib_ratio, io_ratio = _bracket_ratios(calib_pre, calib_post, io_pre, io_post)
-    # a segment whose KEPT run-set still probed over the loose suite
-    # gate contaminates the suite verdict like a suite-level breach
-    seg_coloaded = [
-        r["span"]
-        for r in segment_calib
-        if ((r["ratio_rerun"] if r.get("kept") == "rerun" else r["ratio"]) or 0)
-        > COLOAD_RATIO
-        or (
-            (r["io_ratio_rerun"] if r.get("kept") == "rerun" else r["io_ratio"]) or 0
-        )
-        > IO_COLOAD_RATIO
-    ]
-    coloaded = (
-        (calib_ratio is not None and calib_ratio > COLOAD_RATIO)
-        or (io_ratio is not None and io_ratio > IO_COLOAD_RATIO)
-        or bool(seg_coloaded)
-    )
-
-    def _verdict(value: float) -> bool | None:
-        if value <= SUITE_BUDGET_SEC:
-            return False  # under budget even with co-load on top
-        if coloaded or calib_ratio is None:
-            return None  # can't attribute the overrun to the code
-        return True
-
     # Both bases recorded (round-8 ADVICE): over_budget stays best-of —
     # co-load only adds time, so min() is the code's number — but a
     # code change that is intermittently slow in MOST reps (GC, spills)
     # would pass best-of while the median basis exposes it: the
     # divergent pair (False, True) is the code-induced-variance flag.
-    over_budget = _verdict(total_best)
-    over_budget_median = _verdict(total)
+    over_budget = _verdict(total_best, calib["coloaded"])
+    over_budget_median = _verdict(total, calib["coloaded"])
     # TPC-H-style power metric: geometric mean over the full-fidelity
     # Tier B suite (b1-b22) — the single-number the reference's TPC-H
     # harness reports, robust to one slow outlier. Best-of basis (the
@@ -550,25 +317,9 @@ def main() -> None:
         "over_budget_median": over_budget_median,
         "value_best": total_best,
         "tmpfs_scratch": scratch is not None,
-        "calib": {
-            "idle_ref_sec": CALIB_IDLE_SEC,
-            "pre_sec": calib_pre,
-            "post_sec": calib_post,
-            "ratio": calib_ratio,
-            "io_idle_ref_sec": IO_IDLE_SEC,
-            "io_pre_sec": io_pre,
-            "io_post_sec": io_post,
-            "io_ratio": io_ratio,
-            "canary_pre_sec": canary_pre,
-            "canary_post_sec": canary_post,
-            "coloaded": coloaded,
-            "record_ratio_gate": RECORD_CALIB_RATIO,
-            "seg_coloaded": seg_coloaded,
-            "seg_reran": [r["span"] for r in segment_calib if r["reran"]],
-            "rechecked": sorted(rechecked),
-        },
+        "calib": {**calib, "bracket_spans": spans, "rechecked": sorted(rechecked)},
         "spark": spark.version,
-        "cores": os.environ.get("SPARK_GRAFT_CPUS", "*"),
+        "cores": cores,
         "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
         "aqe": spark.conf.get("spark.sql.adaptive.enabled"),
     }
@@ -583,7 +334,6 @@ def main() -> None:
         "queries_best": best,
         "tpch_geomean_sec": tpch_geomean,
         "tpch_geomean_best_sec": tpch_geomean_best,
-        "segment_calib": segment_calib,
         "riser_recheck": rechecked,
         "aux": aux,
         **config,
@@ -595,66 +345,35 @@ def main() -> None:
         )
     except OSError:
         pass  # read-only checkout: stdout lines remain the record
-    # Compact summary LAST so it survives tail-truncation: per-family
-    # geomeans (median + best-of bases) + the 10 slowest queries (by
-    # best-of, the comparison number) stand in for the full dicts.
-    fams: dict[str, list[float]] = {}
-    fams_best: dict[str, list[float]] = {}
-    for k, v in timings.items():
-        fams.setdefault(_family(k), []).append(max(v, 1e-3))
-        fams_best.setdefault(_family(k), []).append(max(best[k], 1e-3))
-    geo = {
-        f: round(statistics.geometric_mean(ts), 3) for f, ts in sorted(fams.items())
-    }
-    geo_best = {
-        f: round(statistics.geometric_mean(ts), 3)
-        for f, ts in sorted(fams_best.items())
-    }
-    # Compact-line query dict (r14, verdict item 3): the r13 PERF
-    # comparison saw only the top-10 slowest, so the round's biggest
-    # wins left the record as "dropped_from_bench" instead of speedups.
-    # The full 176-query dict cannot ride this line (the driver keeps
-    # only the last ~2,000 chars of stdout — the round-3 truncation
-    # incident), so fill "queries" with as many of the slowest (by
-    # best-of, the comparison basis — unchanged for the entries that
-    # already appeared) as keep the line under budget, never fewer than
-    # the historical 10. Additions-only: every previously-emitted entry
-    # still appears with the same basis; the full dicts stay on the
-    # first line and in bench_last_full.json.
-    slow_sorted = sorted(best.items(), key=lambda kv: -kv[1])
+    print(_compact_line(full))
 
-    def _compact(n_queries_in_line: int, cfg: dict) -> str:
-        return json.dumps(
-            {
-                "metric": "suite_total_sec",
-                "value": total,
-                "unit": "sec",
-                "queries": dict(slow_sorted[:n_queries_in_line]),
-                "summary": "slowest_by_bestof_fit_to_budget_full_dicts_on_first_line",
-                "family_geomean_sec": geo,
-                "family_geomean_best_sec": geo_best,
-                "tpch_geomean_sec": tpch_geomean,
-                "tpch_geomean_best_sec": tpch_geomean_best,
-                **cfg,
-            }
-        )
 
-    line_config = config
-    if len(_compact(10, line_config)) > COMPACT_LINE_BUDGET:
-        # a very noisy run's riser list can alone blow the tail budget:
-        # summarize it to a count on THIS line only (the full list still
-        # rides the first line and bench_last_full.json)
-        line_config = dict(config)
-        line_config["calib"] = {
-            **config["calib"],
-            "rechecked": f"{len(rechecked)} queries (see full record)",
+def _compact_line(full: dict) -> str:
+    """The FINAL stdout line, at most COMPACT_LINE_BUDGET chars: every
+    scalar of the full record (calib's too), per-family geomeans on both
+    bases, and as many of the slowest queries (by best-of) as fit. The
+    per-query and per-segment lists stay on the first line."""
+    line = {k: v for k, v in full.items() if not isinstance(v, (list, dict))}
+    line["calib"] = {
+        k: v for k, v in full["calib"].items() if not isinstance(v, (list, dict))
+    }
+    for key, basis in (
+        ("family_geomean_sec", full["queries"]),
+        ("family_geomean_best_sec", full["queries_best"]),
+    ):
+        fams: dict[str, list[float]] = {}
+        for k, v in basis.items():
+            fams.setdefault(_family(k), []).append(max(v, 1e-3))
+        line[key] = {
+            f: round(statistics.geometric_mean(ts), 3) for f, ts in sorted(fams.items())
         }
-    n_fit = 10
-    for n in range(len(slow_sorted), 10, -1):
-        if len(_compact(n, line_config)) <= COMPACT_LINE_BUDGET:
-            n_fit = n
+    line["summary"] = "slowest_by_bestof_fit_to_budget_full_dicts_on_first_line"
+    slowest = sorted(full["queries_best"].items(), key=lambda kv: -kv[1])
+    for n in range(len(slowest), -1, -1):
+        out = json.dumps({**line, "queries": dict(slowest[:n])})
+        if len(out) <= COMPACT_LINE_BUDGET:
             break
-    print(_compact(n_fit, line_config))
+    return out
 
 
 def _family(name: str) -> str:

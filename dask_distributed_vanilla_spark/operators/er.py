@@ -43,8 +43,7 @@ from dask_distributed_vanilla_spark.operators.graph import min_label_components
 # operator's signal to split hot buckets (longer signatures / a second
 # deletion position / per-bucket salting) BEFORE the quadratic term
 # lands — exactly the moment dedup's DF_CAP would have started dropping.
-# Tune with SPARK_GRAFT_ER_SIG_DF_CAP; <= 0 disables the probe job.
-SIG_DF_CAP = int(os.environ.get("SPARK_GRAFT_ER_SIG_DF_CAP", "1000"))
+SIG_DF_CAP = 1000
 
 
 def _candidate_pairs(spark: SparkSession, sf_dir: str):
@@ -215,7 +214,7 @@ def _guard_sig_occupancy(sigs: DataFrame, sf_dir: str) -> None:
     altered — see the SIG_DF_CAP doc for why FastSS, unlike n-gram
     shingling, cannot drop hot buckets."""
     key = (os.path.realpath(sf_dir), SIG_DF_CAP)
-    if SIG_DF_CAP <= 0 or key in _SIG_GUARD_SEEN:
+    if key in _SIG_GUARD_SEEN:
         return
     hot = (
         sigs.groupBy("sig")
@@ -233,7 +232,7 @@ def _guard_sig_occupancy(sigs: DataFrame, sf_dir: str) -> None:
             f"FastSS: {hot['n_hot']} deletion bucket(s) exceed the occupancy "
             f"ceiling {SIG_DF_CAP} (worst {hot['worst']}); candidate pairs grow "
             f"as occupancy^2 — split hot buckets (longer signatures, second "
-            f"deletion position) or raise SPARK_GRAFT_ER_SIG_DF_CAP.",
+            f"deletion position).",
             RuntimeWarning,
             stacklevel=3,
         )

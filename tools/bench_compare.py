@@ -5,7 +5,8 @@ with the bench.py full-record schema) per query on BEST-OF-REPS — the
 estimator least contaminated by host co-load (SCALE.md §auditing) —
 and prints the calibration context of both sides so a reader can see
 at a glance whether an apparent swing is attributable to code or to a
-loaded box. Older records (pre round 7) carry only medians; when either
+loaded box, and warns when the two records come from different core
+counts. Older records (pre round 7) carry only medians; when either
 side lacks best-of, BOTH sides fall back to medians (every record has
 them), since a mixed median-vs-best comparison would manufacture fake
 improvements.
@@ -64,8 +65,14 @@ def main() -> None:
             else "no calibration record — co-load state unknown"
         )
         print(
-            f"{side}: sf={d.get('sf')} total={d.get('value')}s "
+            f"{side}: sf={d.get('sf')} cores={d.get('cores')} total={d.get('value')}s "
             f"best_total={d.get('value_best', 'n/a')}s basis={bo if side == 'old' else bn} — {note}"
+        )
+    if str(old.get("cores")) != str(new.get("cores")):
+        print(
+            f"WARNING: the records come from different core counts "
+            f"({old.get('cores')} vs {new.get('cores')}); per-query ratios "
+            "compare hosts, not code."
         )
 
     common = sorted(set(qo) & set(qn))
